@@ -6,16 +6,10 @@ full-row checksum: the sum of a per-row hash over every data column, wide
 enough that it cannot overflow. A duplicated row, a lost row or one changed
 byte in any column changes it.
 
-Two readers compute it:
-
-* :func:`summarize_outputs` runs in Spark over ``read_committed(out,
-  "data")``, the package's own exactly-once view, with ``xxhash64``;
-* :func:`summarize_committed` is an independent readback in DuckDB. It
-  applies the same commit rule (a data file counts when the digest in its
-  name is one the checkpoint table committed) with DuckDB's ``hash``. It
-  costs ~50 ms an output where the Spark view costs ~1 s, so it checks every
-  operation, and the Spark view checks the last cold and tail outputs of
-  each run.
+:func:`summarize_outputs` computes it in Spark, with ``xxhash64``, over
+``read_committed(out, "data")``: the package's own exactly-once view, which
+is what a reader of the job's output sees. One call checks any number of
+outputs in one query.
 """
 
 from __future__ import annotations
@@ -23,7 +17,6 @@ from __future__ import annotations
 import json
 import os
 
-import duckdb
 from pyspark.sql import functions as F
 
 from intelligent_ocr_spark.plans.checkpoint import read_committed
@@ -85,47 +78,6 @@ def summarize_outputs(spark, out_dirs: list[str], prefix_n: int) -> list[dict]:
             got[key] = got[key] or 0
         out.append(got)
     return out
-
-
-def summarize_committed(out_dir: str, prefix_n: int) -> dict:
-    """The :func:`summarize_outputs` figures of one output, read back by
-    DuckDB (checksums are DuckDB ``hash`` sums, not comparable with the
-    Spark ones)."""
-    cols = ", ".join(DATA_COLUMNS)
-    h = f"hash({cols})::HUGEINT"
-    reasons = ", ".join(
-        f"count(*) FILTER (WHERE starts_with(error, '{r}')) AS {r}" for r in QUARANTINE_REASONS
-    )
-    data = os.path.join(out_dir, "data", "*.parquet")
-    ckpt = os.path.join(out_dir, "checkpoint", "*.parquet")
-    query = f"""
-        WITH d AS (
-            SELECT *, regexp_extract(filename, '-([0-9a-f]{{16}})\\.parquet$', 1) AS digest
-            FROM read_parquet('{data}', filename = true))
-        SELECT count(*) AS rows, count(DISTINCT url) AS urls,
-               coalesce(sum({h}), 0) AS checksum,
-               coalesce(sum({h}) FILTER (
-                   WHERE regexp_extract(url, 'page-(\\d+)$', 1)::BIGINT < {int(prefix_n)}), 0)
-                   AS prefix_checksum,
-               count(*) FILTER (WHERE skipped) AS skipped,
-               count(*) FILTER (WHERE is_blank) AS blank,
-               {reasons},
-               count(error) AS errors
-        FROM d
-        WHERE digest IN (SELECT commit_digest FROM read_parquet('{ckpt}'))
-    """
-    con = duckdb.connect()
-    try:
-        cur = con.execute(query)
-        names = [c[0] for c in cur.description]
-        got = dict(zip(names, cur.fetchone()))
-    except duckdb.Error as e:
-        raise CheckFailed(f"committed output under {out_dir} is unreadable: {e}") from e
-    finally:
-        con.close()
-    for k in ("checksum", "prefix_checksum"):
-        got[k] = str(got[k])
-    return got
 
 
 def check_output(got: dict, n: int, expected: dict[str, int]) -> None:

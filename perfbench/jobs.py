@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from intelligent_ocr_spark.plans.pipeline import run_extraction_job
 
 from perfbench import procstat
-from perfbench.checks import CheckFailed, check_output, summarize_committed, summarize_outputs
+from perfbench.checks import CheckFailed, check_output, summarize_outputs
 
 SNAPSHOT_ID = 7
 
@@ -78,7 +78,6 @@ class JobBench:
         self.prefix_n = prefix_n
         self.runs_dir = runs_dir
         self.tail_base: str | None = None
-        self.base_df = None
         self.n_base = 0
         self.cfg_hash: str | None = None
         os.makedirs(runs_dir, exist_ok=True)
@@ -97,49 +96,36 @@ class JobBench:
                 f"expected {docs}; integrity_ok={summary.get('integrity_ok')}"
             )
 
-    def _check(self, got: dict, prefix: str) -> None:
+    def _check(self, got: dict) -> None:
         check_output(got, self.n, self.expected)
-        self.ledger.check(prefix + self.checksum_keys["full"], got["checksum"])
+        self.ledger.check(self.checksum_keys["full"], got["checksum"])
         if "prefix" in self.checksum_keys:
-            self.ledger.check(prefix + self.checksum_keys["prefix"], got["prefix_checksum"])
+            self.ledger.check(self.checksum_keys["prefix"], got["prefix_checksum"])
 
     def check_outputs(self, out_dirs: list[str]) -> list[tuple[dict | None, str | None]]:
-        """Check each committed output, read back by DuckDB: exactly-once,
+        """Check each committed output through the package's own
+        ``read_committed`` view, all in one Spark query: exactly-once,
         per-class counts, and its full-row and prefix checksums against the
         ledger. Returns (summary, failure message or ``None``) per dir."""
+        try:
+            summaries = summarize_outputs(self.spark, out_dirs, self.prefix_n)
+        except Exception as e:  # noqa: BLE001 — an unreadable output fails its ops
+            traceback.print_exc(file=sys.stderr)
+            return [(None, f"{e.__class__.__name__}: {e}")] * len(out_dirs)
         verdicts = []
-        for out_dir in out_dirs:
-            got = None
+        for got in summaries:
             try:
-                got = summarize_committed(out_dir, self.prefix_n)
-                self._check(got, "")
+                self._check(got)
                 verdicts.append((got, None))
             except CheckFailed as e:
                 verdicts.append((got, str(e)))
         return verdicts
 
-    def check_read_committed(self, out_dirs: list[str]) -> list[str | None]:
-        """The same checks on the package's own ``read_committed`` view, in
-        one Spark query. Returns a failure message or ``None`` per dir."""
-        try:
-            summaries = summarize_outputs(self.spark, out_dirs, self.prefix_n)
-        except Exception as e:  # noqa: BLE001 — an unreadable output fails its ops
-            traceback.print_exc(file=sys.stderr)
-            return [f"{e.__class__.__name__}: {e}"] * len(out_dirs)
-        verdicts = []
-        for got in summaries:
-            try:
-                self._check(got, "spark:")
-                verdicts.append(None)
-            except CheckFailed as e:
-                verdicts.append(str(e))
-        return verdicts
-
     # -- phases -----------------------------------------------------------
-    def _timed_job(self, input_df, out: str, **job_kwargs) -> tuple[dict, dict]:
+    def _timed_job(self, out: str, **job_kwargs) -> tuple[dict, dict]:
         cpu0 = procstat.cpu_split()
         t0 = time.perf_counter()
-        summary = run_extraction_job(self.spark, input_df, out, SNAPSHOT_ID, **job_kwargs)
+        summary = run_extraction_job(self.spark, self.df, out, SNAPSHOT_ID, **job_kwargs)
         res = {"wall_s": time.perf_counter() - t0, "out": out}
         cpu1 = procstat.cpu_split()
         if cpu0 is not None and cpu1 is not None:
@@ -156,21 +142,35 @@ class JobBench:
         if not 0 < n_base < self.n:
             raise CheckFailed(f"the 90% base committed {n_base} of {self.n} docs")
         self._check_summary(summary, n_base)
-        self.tail_base, self.base_df, self.n_base = out, part, n_base
+        self.tail_base, self.n_base = out, n_base
         self.cfg_hash = summary["config_hash"]
 
-    def warm_up(self, ops: Ops) -> None:
-        """Untimed: the 90% base job, which is a cold job over 90% of the
-        rows, then a no-op resume of it over the same rows, which runs the
-        resume anti-join and the gate once."""
+    def repetition(self, ops: Ops, tag: str = "") -> dict[str, dict | None]:
+        """One ``cold`` → ``noop`` (over that cold output) → ``tail`` pass;
+        the result of each phase, ``None`` for one that failed."""
+        cold = ops.run(tag + "cold", self.cold)
+        noop = ops.run(tag + "noop", self.noop, cold["out"]) if cold is not None else None
+        tail = ops.run(tag + "tail", self.tail)
+        return {"cold": cold, "noop": noop, "tail": tail}
+
+    def warm_up(self, ops: Ops) -> list[tuple[str, dict]]:
+        """Untimed: one job of every timed phase's plan, so that no timed
+        job is the first of its plan in this JVM. The 90% base job is a
+        cold job over 90% of the rows; a tail on a copy of it is the tail
+        phase; a resume over that tail's output, which then holds every
+        row, is the no-op phase. Returns the full output it made, to be
+        checked like a timed one."""
         ops.run("tail-base", self.prepare_tail_base)
-        if self.tail_base is not None:
-            ops.run("warm-noop", self.noop, self.tail_base, self.base_df)
+        tail = ops.run("warm-tail", self.tail)
+        if tail is None:
+            return []
+        ops.run("warm-noop", self.noop, tail["out"])
+        return [("warm-tail", tail)]
 
     def cold(self, **job_kwargs) -> dict:
         """Cold job into a new directory; also records the largest
         Python-worker and JVM VmHWM at its end."""
-        summary, res = self._timed_job(self.df, self.new_dir("cold"), **job_kwargs)
+        summary, res = self._timed_job(self.new_dir("cold"), **job_kwargs)
         self._check_summary(summary, self.n, gate=bool(job_kwargs.get("integrity_check", True)))
         rss = procstat.peak_rss_mb()
         if rss is not None:
@@ -184,17 +184,14 @@ class JobBench:
             raise CheckFailed("no 90% base output to resume from")
         out = self.new_dir("tail")
         shutil.copytree(self.tail_base, out)
-        summary, res = self._timed_job(self.df, out)
+        summary, res = self._timed_job(out)
         self._check_summary(summary, self.n - self.n_base)
         return res
 
-    def noop(self, out: str, input_df=None, **job_kwargs) -> dict:
-        """Re-run over ``out``, which has every row of ``input_df`` (default:
-        the whole table) committed."""
+    def noop(self, out: str, **job_kwargs) -> dict:
+        """Re-run over ``out``, which has every row of the table committed."""
         files_before = _file_count(out)
-        summary, res = self._timed_job(
-            self.df if input_df is None else input_df, out, **job_kwargs
-        )
+        summary, res = self._timed_job(out, **job_kwargs)
         self._check_summary(summary, 0, gate=bool(job_kwargs.get("integrity_check", True)))
         if _file_count(out) != files_before:
             raise CheckFailed("a resume with nothing left to do wrote files")

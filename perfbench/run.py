@@ -2,7 +2,7 @@
 
 Usage (from the repository root)::
 
-    python3 perfbench/run.py --workload plain-p4 --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload plain-p4 --seed 1 --seconds 1 --trace 0
 
 One run is one fresh process, one SparkSession on ``local[P]`` and a closed
 loop: one job at a time. ``--trace 0`` times the end-to-end phases (see
@@ -30,7 +30,7 @@ WORK = os.path.join(ROOT, ".perfbench_work")
 #: seed whose output checksums are pinned in perfbench/pinned.json
 DEFAULT_SEED = 42
 #: timed repetitions of each phase, at least, whatever --seconds says
-MIN_REPS = 2
+MIN_REPS = 3
 
 
 @dataclass(frozen=True)
@@ -45,8 +45,8 @@ class Workload:
 
 
 WORKLOADS = {
-    "plain-p4": Workload("plain", 16000, 4, 4000),
-    "real-p4": Workload("real", 6400, 4, 1600),
+    "plain-p4": Workload("plain", 36000, 4, 9000),
+    "real-p4": Workload("real", 12000, 4, 3000),
 }
 
 
@@ -102,59 +102,40 @@ def median(values):
     return statistics.median(values) if values else None
 
 
-def _checked(jb, ops, runs: list[tuple[str, dict]], keep: bool = False) -> dict[str, dict]:
-    """Check the outputs of ``runs`` (name, phase result) and fail the
-    operations whose output is wrong; remove the outputs unless ``keep``.
-    Returns the output summaries of the runs that passed, by name."""
+def _checked(jb, ops, runs: list[tuple[str, dict]]) -> dict[str, dict]:
+    """Check the outputs of ``runs`` (name, phase result) in one query, fail
+    the operations whose output is wrong, and remove the outputs. Returns
+    the output summaries of the runs that passed, by name."""
     passed = {}
     for (name, r), (got, why) in zip(runs, jb.check_outputs([r["out"] for _, r in runs])):
         if why is not None:
             ops.fail(name, why)
         else:
             passed[name] = got
-        if not keep:
-            shutil.rmtree(r["out"], ignore_errors=True)
+        shutil.rmtree(r["out"], ignore_errors=True)
     return passed
 
 
-def _checked_read_committed(jb, ops, runs: list[tuple[str, dict]]) -> None:
-    """Check ``runs`` again through ``read_committed`` (one Spark query) and
-    remove their outputs."""
-    for (name, r), why in zip(runs, jb.check_read_committed([r["out"] for _, r in runs])):
-        if why is not None:
-            ops.fail(f"{name} (read_committed view)", why)
-        shutil.rmtree(r["out"], ignore_errors=True)
-
-
 def timed_run(jb, seconds: float, ops) -> dict:
-    """Warm the JVM and the Python workers, untimed; then repeat cold →
-    noop → tail until ``seconds`` have passed (at least MIN_REPS times) and
-    report in-run medians."""
-    jb.warm_up(ops)
-
-    cold, noop, tail = [], [], []
-    last: list[tuple[str, dict]] = []  # the final ones are checked through read_committed too
+    """Warm every phase, untimed; then repeat cold → noop → tail until
+    ``seconds`` have passed, at least MIN_REPS times, and report in-run
+    medians. Every output is kept until the end and checked in one query."""
+    t0 = time.perf_counter()
+    runs = jb.warm_up(ops)
+    t_warm = time.perf_counter() - t0
+    reps = []
     t_end = time.perf_counter() + seconds
-    while len(cold) < MIN_REPS or time.perf_counter() < t_end:
-        runs = []
-        c = ops.run("cold", jb.cold)
-        if c is not None:
-            n = ops.run("noop", jb.noop, c["out"])
-            if n is not None:
-                noop.append(n)
-            cold.append(c)
-            runs.append(("cold", c))
-        t = ops.run("tail", jb.tail)
-        if t is not None:
-            tail.append(t)
-            runs.append(("tail", t))
-        if not runs:
+    while len(reps) < MIN_REPS or time.perf_counter() < t_end:
+        rep = jb.repetition(ops)
+        reps.append(rep)
+        runs += [(k, rep[k]) for k in ("cold", "tail") if rep[k] is not None]
+        if rep["cold"] is None and rep["tail"] is None:
             break  # nothing works; do not spin until the deadline
-        for _, r in last:
-            shutil.rmtree(r["out"], ignore_errors=True)
-        _checked(jb, ops, runs, keep=True)
-        last = runs
-    _checked_read_committed(jb, ops, last)
+    cold, noop, tail = ([r[k] for r in reps if r[k] is not None] for k in ("cold", "noop", "tail"))
+    t0 = time.perf_counter()
+    if runs:
+        _checked(jb, ops, runs)
+    t_check = time.perf_counter() - t0
     metrics = {}
     if cold:
         metrics["cold_docs_per_s"] = median([c["docs"] / c["wall_s"] for c in cold])
@@ -175,7 +156,8 @@ def timed_run(jb, seconds: float, ops) -> dict:
         f"perfbench: {len(cold)} cold, {len(tail)} tail, {len(noop)} noop timed reps; "
         + " ".join(f"cold={c['wall_s']:.2f}" for c in cold) + " "
         + " ".join(f"tail={c['wall_s']:.2f}" for c in tail) + " "
-        + " ".join(f"noop={c['wall_s']:.2f}" for c in noop),
+        + " ".join(f"noop={c['wall_s']:.2f}" for c in noop)
+        + f"; warm-up {t_warm:.1f} s, output checks {t_check:.1f} s",
         file=sys.stderr,
     )
     return metrics
@@ -269,6 +251,7 @@ def main(argv=None) -> int:
     input_path = ctx.table(wl.table, args.seed, wl.n)
     keys = {"full": f"{wl.table}-s{args.seed}-n{wl.n}", "prefix": ctx.prefix_key(wl, args.seed)}
     ops = Ops()
+    t_run = time.perf_counter()
     try:
         t0 = time.perf_counter()
         spark = ctx.session(wl.parallelism)
@@ -291,6 +274,8 @@ def main(argv=None) -> int:
     finally:
         ctx.close()
         shutil.rmtree(ctx.runs_dir, ignore_errors=True)
+    print(f"perfbench: run took {time.perf_counter() - t_run:.1f} s after input generation",
+          file=sys.stderr)
     correct = ops.failed == 0
     spec = _metric_spec("per_layer" if args.trace else "end_to_end")
     absent = [m["name"] for m in spec if metrics.get(m["name"]) is None]

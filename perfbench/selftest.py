@@ -6,8 +6,9 @@
    parser tier 1 or 2, no ``plain`` page takes tier 3 or 4, and the
    charset mix of the salted pages equals the one pinned in
    ``perfbench/pinned.json``.
-2. Every phase and check once, at tiny size, in-process: the 90% base,
-   cold, noop and tail jobs, and the output check of each.
+2. Every phase and check at tiny size, in-process: the warm-up (90% base,
+   tail, noop), a timed repetition (cold, noop, tail), and the output
+   check of each.
 3. The checks are not vacuous: a committed output with a duplicated data
    file, and a good output checked against a wrong pinned checksum, must
    each be reported as a failed operation.
@@ -96,15 +97,13 @@ def main() -> int:
         jb = JobBench(spark, ctx.table("plain", seed, TINY), TINY, ctx.expected(TINY),
                       ctx.ledger, keys, wl.prefix_n, ctx.runs_dir)
         ops = Ops()
-        ops.run("tail-base", jb.prepare_tail_base)
-        cold = ops.run("cold", jb.cold)
-        noop = ops.run("noop", jb.noop, cold["out"]) if cold else None
-        tail = ops.run("tail", jb.tail)
-        outs = [cold["out"], tail["out"]] if cold and tail else []
-        verdicts = [why for _, why in jb.check_outputs(outs)] + jb.check_read_committed(outs)
-        _expect(results, "every phase runs and passes both readers' checks",
-                ops.failed == 0 and noop is not None and len(verdicts) == 4
-                and verdicts == [None] * 4,
+        runs = jb.warm_up(ops)
+        rep = jb.repetition(ops)
+        cold, noop, tail = rep["cold"], rep["noop"], rep["tail"]
+        outs = [r["out"] for _, r in runs] + ([cold["out"], tail["out"]] if cold and tail else [])
+        verdicts = [why for _, why in jb.check_outputs(outs)]
+        _expect(results, "every phase runs and passes the output checks",
+                ops.failed == 0 and noop is not None and verdicts == [None] * 3,
                 f"attempted={ops.attempted} failed={ops.failed} {verdicts}")
 
         # duplicated data file: same digest, so the committed view keeps both
@@ -112,29 +111,23 @@ def main() -> int:
         src = sorted(f for f in os.listdir(data_dir) if f.startswith("part-"))[0]
         digest = src.rsplit("-", 1)[1]
         shutil.copy(os.path.join(data_dir, src), os.path.join(data_dir, f"part-99999-{digest}"))
-        for reader, check in (("duckdb", lambda o: [w for _, w in jb.check_outputs(o)]),
-                              ("read_committed", jb.check_read_committed)):
-            ops = Ops()
-            for why in check([cold["out"]]):
-                if why is not None:
-                    ops.fail("cold (duplicated data file)", why)
-            _expect(results, f"{reader}: a duplicated data file is a failed operation",
-                    ops.failed == 1)
+        ops = Ops()
+        for _, why in jb.check_outputs([cold["out"]]):
+            if why is not None:
+                ops.fail("cold (duplicated data file)", why)
+        _expect(results, "a duplicated data file is a failed operation", ops.failed == 1)
 
-            jb.ledger = ChecksumLedger(os.path.join(ctx.runs_dir, "wrong.json"),
-                                       {keys["full"]: "0", "spark:" + keys["full"]: "0"})
-            ops = Ops()
-            for why in check([tail["out"]]):
-                if why is not None:
-                    ops.fail("tail (wrong pinned checksum)", why)
-            _expect(results, f"{reader}: a wrong pinned checksum is a failed operation",
-                    ops.failed == 1)
-            jb.ledger = ctx.ledger
+        jb.ledger = ChecksumLedger(os.path.join(ctx.runs_dir, "wrong.json"), {keys["full"]: "0"})
+        ops = Ops()
+        for _, why in jb.check_outputs([tail["out"]]):
+            if why is not None:
+                ops.fail("tail (wrong pinned checksum)", why)
+        _expect(results, "a wrong pinned checksum is a failed operation", ops.failed == 1)
+        jb.ledger = ctx.ledger
         pinned = load_pinned()
         _expect(results, "the tiny output matches its pinned checksums",
-                keys["full"] in pinned and "spark:" + keys["full"] in pinned
-                and jb.check_outputs([tail["out"]])[0][1] is None
-                and jb.check_read_committed([tail["out"]]) == [None])
+                keys["full"] in pinned and keys["prefix"] in pinned
+                and jb.check_outputs([tail["out"]])[0][1] is None)
     finally:
         ctx.close()
         shutil.rmtree(ctx.runs_dir, ignore_errors=True)

@@ -119,14 +119,27 @@ class SparkMetrics:
             return None
         return sum(s.shuffleWriteBytes() for s in st) / 1024.0**2
 
-    def task_skew(self, since) -> float | None:
-        """max / median task run time of the busiest stage after ``since``
-        (in a job run, the extract+commit stage)."""
+    def _busiest_stage(self, since):
+        """The stage after ``since`` with the most executor run time (in a
+        job run, the extract+commit stage), or ``None``."""
         st = self.stages(since)
-        if not st:
-            return None
+        return max(st, key=lambda s: s.executorRunTime()) if st else None
+
+    def busiest_stage_tasks(self, since) -> int | None:
+        """Task count of the busiest stage after ``since``."""
         try:
-            busiest = max(st, key=lambda s: s.executorRunTime())
+            busiest = self._busiest_stage(since)
+            return None if busiest is None else busiest.numTasks()
+        except Exception as e:  # noqa: BLE001
+            _warn("stage task count", e)
+            return None
+
+    def task_skew(self, since) -> float | None:
+        """max / median task run time of the busiest stage after ``since``."""
+        try:
+            busiest = self._busiest_stage(since)
+            if busiest is None:
+                return None
             tasks = self._app_store().taskList(busiest.stageId(), busiest.attemptId(), 100000)
             times = []
             for i in range(tasks.size()):

@@ -292,7 +292,7 @@ def job_layers(jb: JobBench, tracer: Tracer, ops, input_path: str) -> tuple[dict
         return sp
 
     with tracer.span("job.warm_up"):
-        jb.warm_up(ops)  # as in the timed run
+        to_check.extend(jb.warm_up(ops))  # as in the timed run
 
     untraced = phase("job.cold_untraced", jb.cold).result
     if untraced is not None:
@@ -313,6 +313,13 @@ def job_layers(jb: JobBench, tracer: Tracer, ops, input_path: str) -> tuple[dict
         m["ipc.worker_start_s"] = None if None in start else sum(start)
         m["pipeline.shuffle_mb"] = sm.shuffle_write_mb(mark)
         m["pipeline.task_skew"] = sm.task_skew(mark)
+        # rows and bytes one extract task feeds its Python worker: above
+        # maxRecordsPerBatch (4096) or maxBytesPerBatch (32 MiB) the batch
+        # cap splits the partition into several Arrow batches
+        tasks = sm.busiest_stage_tasks(mark)
+        if tasks:
+            m["ipc.rows_per_task"] = docs / tasks
+            m["ipc.sent_mb_per_task"] = _div(m["ipc.sent_mb"], tasks)
         if "cpu_jvm_s" in cold:
             m["cpu.cold.jvm_s"] = cold["cpu_jvm_s"]
             m["cpu.cold.python_s"] = cold["cpu_python_s"]
