@@ -145,12 +145,12 @@ class JobBench:
         self.tail_base, self.n_base = out, n_base
         self.cfg_hash = summary["config_hash"]
 
-    def repetition(self, ops: Ops, tag: str = "") -> dict[str, dict | None]:
+    def repetition(self, ops: Ops) -> dict[str, dict | None]:
         """One ``cold`` → ``noop`` (over that cold output) → ``tail`` pass;
         the result of each phase, ``None`` for one that failed."""
-        cold = ops.run(tag + "cold", self.cold)
-        noop = ops.run(tag + "noop", self.noop, cold["out"]) if cold is not None else None
-        tail = ops.run(tag + "tail", self.tail)
+        cold = ops.run("cold", self.cold)
+        noop = ops.run("noop", self.noop, cold["out"]) if cold is not None else None
+        tail = ops.run("tail", self.tail)
         return {"cold": cold, "noop": noop, "tail": tail}
 
     def warm_up(self, ops: Ops) -> list[tuple[str, dict]]:
