@@ -7,7 +7,7 @@ Common-Crawl-style page tables ``(url, warc_ts, html:binary, text, lang)``.
 
 Architecture (Spark-first, not a port):
 
-* one fused, Arrow-vectorized ``mapInPandas`` extraction operator
+* one Arrow batch extraction kernel run under ``mapInArrow``
   (:mod:`intelligent_ocr_spark.operators.extract`) replaces the reference's
   thread/queue/process-pool pipeline (reference ``core/pdf_processor.py:1018-1646``);
 * resume / lineage are table-level joins and per-partition atomic commits

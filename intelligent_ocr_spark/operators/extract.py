@@ -1,8 +1,9 @@
 # -*- coding: utf-8 -*-
 """The fused extraction operator — the engine proper.
 
-One Arrow-vectorized ``mapInPandas`` stage replaces the reference's whole
-render-thread / bounded-queue / process-pool pipeline
+One Arrow batch kernel (:func:`extract_batch`, run under ``mapInArrow``
+by :func:`extract_pages` and by the job's commit stage) replaces the
+reference's whole render-thread / bounded-queue / process-pool pipeline
 (``core/pdf_processor.py:1018-1646``): per input row (one web page), it
 
 1. takes the existing-text fast path when ``len(text.strip()) > 50``
@@ -62,6 +63,7 @@ from intelligent_ocr_spark.functions.pixmap import (
 
 __all__ = [
     "EXTRACT_SCHEMA",
+    "extract_batch",
     "extract_pages",
     "extract_record",
     "repartition_by_url",
@@ -744,65 +746,43 @@ def extract_record(
     return out
 
 
-def _extract_arrow_batches(
-    batches,
+def extract_batch(
+    batch,
     min_confidence: float,
     existing_text_min_chars: int,
     retry_limit: int,
 ):
-    """mapInArrow kernel: consume Arrow record batches directly and build
-    the output batch columnar — no pandas layer on either side.
+    """The extraction kernel: one Arrow record batch of pages in, one Arrow
+    record batch of :data:`EXTRACT_SCHEMA` rows out, built columnar — no
+    pandas layer on either side. :func:`extract_pages` and the job's commit
+    stage (``plans/pipeline.py``) both run every batch through it.
 
-    Input columns arrive positionally as selected by
-    :func:`extract_pages` (url, warc_ts, html, text, lang). ``url``,
-    ``warc_ts`` and ``lang`` PASS THROUGH as the original Arrow arrays
-    (zero conversion — in particular the timestamp column never takes the
-    per-batch pandas tz round-trip); only the computed columns are built,
-    with one C-level ``pa.array`` per column. Measured ~15% extraction
-    wall-time over the pandas form with byte-identical output (round-6).
+    Input columns are read by POSITION: (url, warc_ts, html, text, lang),
+    as the callers select them. ``url``, ``warc_ts`` and ``lang`` PASS
+    THROUGH as the original Arrow arrays (zero conversion — the timestamp
+    column keeps its UTC instants whatever the session time zone); only
+    the computed columns are built, with one C-level ``pa.array`` per
+    column. Measured ~15% extraction wall-time over the pandas form with
+    byte-identical output (round-6).
     """
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(EXTRACT_SCHEMA)
-    span_t = schema.field("spans").type
-    str_t = pa.string()
-    bool_t = pa.bool_()
-    i32_t = pa.int32()
-    i64_t = pa.int64()
-    for b in batches:
-        urls = b.column(0).to_pylist()
-        htmls = b.column(2).to_pylist()
-        texts = b.column(3).to_pylist()
-        langs = b.column(4).to_pylist()
-        recs = [
-            extract_record(
-                u, None, h, tx, lg,
-                min_confidence=min_confidence,
-                existing_text_min_chars=existing_text_min_chars,
-                retry_limit=retry_limit,
-            )
-            for u, h, tx, lg in zip(urls, htmls, texts, langs)
-        ]
-        yield pa.RecordBatch.from_arrays(
-            [
-                b.column(0),  # url (passthrough)
-                b.column(1),  # warc_ts (passthrough — ts is not computed on)
-                b.column(4),  # lang (passthrough)
-                pa.array([r["extracted_text"] for r in recs], str_t),
-                pa.array([r["norm_text"] for r in recs], str_t),
-                pa.array([r["spans"] for r in recs], span_t),
-                pa.array([r["skipped"] for r in recs], bool_t),
-                pa.array([r["is_blank"] for r in recs], bool_t),
-                pa.array([r["error"] for r in recs], str_t),
-                pa.array([r["n_blocks"] for r in recs], i32_t),
-                pa.array([r["n_dropped"] for r in recs], i32_t),
-                pa.array([r["retries"] for r in recs], i32_t),
-                pa.array([r["html_bytes"] for r in recs], i64_t),
-            ],
-            schema=schema,
+    urls, htmls, texts, langs = (batch.column(i).to_pylist() for i in (0, 2, 3, 4))
+    recs = [
+        extract_record(
+            u, None, h, tx, lg,
+            min_confidence=min_confidence,
+            existing_text_min_chars=existing_text_min_chars,
+            retry_limit=retry_limit,
         )
+        for u, h, tx, lg in zip(urls, htmls, texts, langs)
+    ]
+    passthrough = [batch.column(0), batch.column(1), batch.column(4)]  # url, warc_ts, lang
+    computed = [pa.array([r[f.name] for r in recs], f.type) for f in list(schema)[3:]]
+    return pa.RecordBatch.from_arrays(passthrough + computed, schema=schema)
 
 
 def extract_pages(
@@ -818,8 +798,9 @@ def extract_pages(
     """
     pruned = df.select("url", "warc_ts", "html", "text", "lang")
     return pruned.mapInArrow(
-        lambda it: _extract_arrow_batches(
-            it, min_confidence, existing_text_min_chars, retry_limit
+        lambda it: (
+            extract_batch(b, min_confidence, existing_text_min_chars, retry_limit)
+            for b in it
         ),
         EXTRACT_SCHEMA,
     )

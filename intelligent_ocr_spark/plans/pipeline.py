@@ -8,10 +8,10 @@ SURVEY.md §3.4:
 
 .. code-block:: text
 
-    read pages                                   -- S1
+    read pages, pruned to the 5 input columns   -- S1
       .join(checkpoint_done, "url", "left_anti") -- J2 resume
       .repartition(P, xxhash64("url"))           -- url-hash layout (north_rule)
-      .mapInPandas(extract_and_commit, lineage)  -- M1..M4, F2..F5, X1..X5, W1/W3 fused
+      .mapInArrow(extract_and_commit, lineage)   -- M1..M4, F2..F5, X1..X5, W1/W3 fused
       -> per-partition atomic commit of data + checkpoint + lineage rows
       -> integrity gate (R5) over the checkpoint table
 
@@ -20,11 +20,14 @@ repartition — and even that is skipped when the caller's layout is already
 keyed by url). Lineage is the ONLY thing that crosses back to the driver:
 one row per partition.
 
-Scale notes: the commit stage STREAMS — each incoming Arrow batch is
-extracted and appended to the partition's temp parquet file via an
-incremental ``pyarrow.parquet.ParquetWriter`` (one row group per batch),
-so peak Python memory is one Arrow batch of records
-(``spark.sql.execution.arrow.maxRecordsPerBatch``), never the whole
+Scale notes: the commit stage STREAMS — each incoming Arrow batch goes
+through the same extraction kernel as ``extract_pages``
+(:func:`~intelligent_ocr_spark.operators.extract.extract_batch`), and the
+kernel's output record batch is appended to the partition's temp parquet
+file via an incremental ``pyarrow.parquet.ParquetWriter`` (one row group
+per batch), so peak Python memory is one Arrow batch of records (capped
+at 4096 rows / 32 MiB by ``spark.sql.execution.arrow.maxRecordsPerBatch``
+and ``maxBytesPerBatch``, see ``session.py``), never the whole
 partition. Only urls + statuses + lineage counters stay buffered (bytes
 per doc, not the doc). The reference's own incremental temp save
 (``core/pdf_processor.py:1397-1404``, save every N pages) has the same
@@ -40,8 +43,8 @@ import uuid
 from datetime import datetime, timezone
 from typing import Callable, Iterable, Iterator
 
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark import TaskContext
@@ -53,7 +56,7 @@ from intelligent_ocr_spark.operators.extract import (
     DEFAULT_EXISTING_TEXT_MIN_CHARS,
     DEFAULT_MIN_CONFIDENCE,
     DEFAULT_RETRY_LIMIT,
-    extract_record,
+    extract_batch,
 )
 from intelligent_ocr_spark.plans.checkpoint import (
     CHECKPOINT_PA_SCHEMA,
@@ -84,44 +87,6 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("ended_at", T.TimestampType(), False),
     ]
 )
-
-# No commit_digest column: the digest is not known until the partition's
-# last batch has streamed through the writer, so it lives in the FILE NAME
-# (part-{pid}-{digest}.parquet) and is derived at read time
-# (checkpoint.read_committed) — the same place the janitor reads it from.
-DATA_PA_SCHEMA = pa.schema(
-    [
-        ("url", pa.string()),
-        ("warc_ts", pa.timestamp("us", tz="UTC")),
-        ("lang", pa.string()),
-        ("extracted_text", pa.string()),
-        ("norm_text", pa.string()),
-        (
-            "spans",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("start", pa.int32()),
-                        ("end", pa.int32()),
-                        ("block_id", pa.int32()),
-                        ("kind", pa.string()),
-                        ("conf", pa.float64()),
-                        ("font_size", pa.float64()),
-                        ("is_vertical", pa.bool_()),
-                    ]
-                )
-            ),
-        ),
-        ("skipped", pa.bool_()),
-        ("is_blank", pa.bool_()),
-        ("error", pa.string()),
-        ("n_blocks", pa.int32()),
-        ("n_dropped", pa.int32()),
-        ("retries", pa.int32()),
-        ("html_bytes", pa.int64()),
-    ]
-)
-
 
 # lineage `errors` is a bounded SAMPLE (first CAP seen, sorted at write);
 # the exact count lives in `n_errors`. Unbounded, a poisoned partition
@@ -156,14 +121,6 @@ def make_partition_kill_hook(pids: frozenset[int] | set[int]):
     return hook
 
 
-def _status(rec: dict) -> str:
-    if rec["error"] is not None:
-        return "failed"
-    if rec["skipped"] or rec["is_blank"]:
-        return "skipped"  # reference marks blank + existing-text via mark_page_skipped
-    return "completed"
-
-
 def _make_commit_fn(
     out_dir: str,
     input_snapshot_id: int,
@@ -174,12 +131,12 @@ def _make_commit_fn(
     partition_fail_hook: Callable[[int], None] | None,
     crash_between_renames: Callable[[int], None] | None = None,
     flush_probe: Callable[[int], None] | None = None,
-) -> Callable[[Iterable[pd.DataFrame]], Iterator[pd.DataFrame]]:
+) -> Callable[[Iterable[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
     data_dir = os.path.join(out_dir, "data")
     ckpt_dir = os.path.join(out_dir, "checkpoint")
     lineage_dir = os.path.join(out_dir, "lineage")
 
-    def commit(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def commit(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         started = datetime.now(timezone.utc)
@@ -190,7 +147,6 @@ def _make_commit_fn(
         tmp_data = os.path.join(data_dir, f".tmp-{uuid.uuid4().hex}")
         writer: pq.ParquetWriter | None = None
         url_status: list[tuple[str, str]] = []
-        docs = 0
         total_bytes = 0
         n_skipped = 0
         n_blank = 0
@@ -199,51 +155,50 @@ def _make_commit_fn(
         errors: list[str] = []
         retry_stats: dict[int, int] = {}
         try:
-            for pdf in batches:
-                recs: list[dict] = []
-                for u, ts, h, tx, lg in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"], pdf["lang"]
-                ):
-                    recs.append(
-                        extract_record(
-                            u, ts, h, tx, lg,
-                            min_confidence=min_confidence,
-                            existing_text_min_chars=existing_text_min_chars,
-                            retry_limit=retry_limit,
-                        )
-                    )
-                if not recs:
+            for batch in batches:
+                if not batch.num_rows:
                     continue
-                for r, in_text in zip(recs, pdf["text"]):
-                    url_status.append((r["url"], _status(r)))
-                    total_bytes += r["html_bytes"]
-                    if r["skipped"] or r["is_blank"]:
-                        n_skipped += 1
-                    if r["is_blank"]:
-                        n_blank += 1
-                    if r["error"] is not None:
-                        n_errors += 1
-                        # bounded sample: a poisoned partition (e.g. a crawl
-                        # segment of undecodable pages) must not grow one
-                        # lineage row to the whole partition's error strings
-                        # — run_extraction_job collects lineage to the driver
-                        if len(errors) < ERROR_SAMPLE_CAP:
-                            errors.append(r["error"])
-                        # J3 fallback semantics (reference fallback_pages,
-                        # core/pdf_processor.py:1170-1193): count rows that
-                        # finalize_with_fallback will actually RECOVER — a
-                        # quarantined row with usable input text — not every
-                        # quarantine candidate
-                        if in_text is not None and str(in_text).strip():
-                            n_fallback += 1
-                    if r["retries"]:
-                        retry_stats[r["retries"]] = retry_stats.get(r["retries"], 0) + 1
-                docs += len(recs)
+                out = extract_batch(
+                    batch, min_confidence, existing_text_min_chars, retry_limit
+                )
+                error = out.column("error")
+                blank = out.column("is_blank")
+                failed = pc.is_valid(error)
+                # reference marks blank + existing-text via mark_page_skipped
+                skipped = pc.or_(out.column("skipped"), blank)
+                status = pc.if_else(failed, "failed", pc.if_else(skipped, "skipped", "completed"))
+                url_status += zip(out.column("url").to_pylist(), status.to_pylist())
+                total_bytes += pc.sum(out.column("html_bytes")).as_py()
+                n_skipped += pc.sum(skipped).as_py()
+                n_blank += pc.sum(blank).as_py()
+                n_errors += pc.sum(failed).as_py()
+                # bounded sample: a poisoned partition (e.g. a crawl segment
+                # of undecodable pages) must not grow one lineage row to the
+                # whole partition's error strings — run_extraction_job
+                # collects lineage to the driver
+                errors += pc.drop_null(error)[: ERROR_SAMPLE_CAP - len(errors)].to_pylist()
+                # J3 fallback semantics (reference fallback_pages,
+                # core/pdf_processor.py:1170-1193): count rows that
+                # finalize_with_fallback will actually RECOVER — a
+                # quarantined row with usable input text — not every
+                # quarantine candidate
+                n_fallback += sum(
+                    1 for t in pc.filter(batch.column(3), failed).to_pylist() if t and t.strip()
+                )
+                for r in out.column("retries").to_pylist():
+                    if r:
+                        retry_stats[r] = retry_stats.get(r, 0) + 1
                 if writer is None:
-                    writer = pq.ParquetWriter(tmp_data, DATA_PA_SCHEMA)
-                writer.write_table(pa.Table.from_pylist(recs, schema=DATA_PA_SCHEMA))
+                    # No commit_digest column: the digest is not known until
+                    # the partition's last batch has streamed through the
+                    # writer, so it lives in the FILE NAME
+                    # (part-{pid}-{digest}.parquet) and is derived at read
+                    # time (checkpoint.read_committed) — the same place the
+                    # janitor reads it from.
+                    writer = pq.ParquetWriter(tmp_data, out.schema)
+                writer.write_batch(out)
                 if flush_probe is not None:
-                    flush_probe(len(recs))  # test-only: observe peak buffering
+                    flush_probe(out.num_rows)  # test-only: observe peak buffering
             if partition_fail_hook is not None:
                 partition_fail_hook(pid)  # test-only kill injection
         except BaseException:
@@ -284,7 +239,7 @@ def _make_commit_fn(
             "commit_digest": digest,
             "input_snapshot_id": input_snapshot_id,
             "partition_id": pid,
-            "docs": docs,
+            "docs": len(url_status),
             "bytes": total_bytes,
             "errors": sorted(errors),  # first-CAP sample, sorted for stability
             "n_errors": n_errors,
@@ -295,11 +250,8 @@ def _make_commit_fn(
             "started_at": started,
             "ended_at": ended,
         }
-        commit_parquet_atomic(
-            pa.Table.from_pylist([lineage], schema=LINEAGE_PA_SCHEMA),
-            lineage_dir,
-            name,
-        )
+        lineage_table = pa.Table.from_pylist([lineage], schema=LINEAGE_PA_SCHEMA)
+        commit_parquet_atomic(lineage_table, lineage_dir, name)
         if crash_between_renames is not None:
             crash_between_renames(pid)  # test-only: simulate torn commit
         # 3) checkpoint rows — the COMMIT POINT (J2 anti-join side)
@@ -320,7 +272,7 @@ def _make_commit_fn(
             ckpt_dir,
             name,
         )
-        yield pd.DataFrame([{k: v for k, v in lineage.items() if k != "commit_digest"}])
+        yield from lineage_table.drop_columns("commit_digest").to_batches()
 
     return commit
 
@@ -354,8 +306,10 @@ def run_extraction_job(
     cfg_hash = config_hash(cfg)
     ckpt_dir = os.path.join(out_dir, "checkpoint")
 
+    # extract_batch reads its input columns by position
+    pages = input_df.select("url", "warc_ts", "html", "text", "lang")
     done = completed_urls(spark, ckpt_dir, input_snapshot_id, cfg_hash)
-    todo = input_df if done is None else input_df.join(done, "url", "left_anti")
+    todo = pages if done is None else pages.join(done, "url", "left_anti")
 
     p = num_partitions or spark.sparkContext.defaultParallelism
     todo = todo.repartition(p, F.xxhash64("url"))  # url-hash layout (north_rule)
@@ -371,7 +325,7 @@ def run_extraction_job(
         _crash_between_renames,
         _flush_probe,
     )
-    lineage_rows = todo.mapInPandas(commit_fn, LINEAGE_SCHEMA).collect()
+    lineage_rows = todo.mapInArrow(commit_fn, LINEAGE_SCHEMA).collect()
 
     summary = {
         "out_dir": out_dir,

@@ -5,7 +5,7 @@ The reference is a batch tool with resume (SURVEY.md §2.10) — its
 natural incremental shape is a file-source stream: new page files landing
 in a directory are discovered per micro-batch, run through the SAME fused
 extraction operator (``extract_pages`` works unchanged on a streaming
-DataFrame — mapInPandas is streaming-compatible), and appended to the
+DataFrame — mapInArrow is streaming-compatible), and appended to the
 output sink with exactly-once file-source semantics via the stream
 checkpoint. This subsumes the reference's checkpoint/resume for the
 continuous-ingest case: a killed stream resumes from its offsets log
@@ -145,7 +145,7 @@ def stream_media_stats(media_stream: DataFrame) -> DataFrame:
     """The fused image decode+stats operator applied to a streaming
     DataFrame — the batch ``decode_image_stats`` runs unchanged on a
     stream because it is one stateless ``mapInPandas`` stage (operator
-    reuse is the point, exactly as ``stream_extract``)."""
+    reuse is the point, as with ``stream_extract``'s ``mapInArrow``)."""
     from intelligent_ocr_spark.operators.multimodal import decode_image_stats
 
     return decode_image_stats(media_stream)

@@ -40,13 +40,14 @@ then deletes the folded directories, so the per-batch state read is
   works and sees exactly the uncompacted tail.
 * Torn-replay idempotence is preserved: compaction only ever folds ids
   STRICTLY BEFORE the current batch (Structured Streaming replays at
-  most the last in-flight batch, so a folded id can never be replayed);
-  a replayed compaction rewrites ``_base/v=<id>`` with ``overwrite``
-  from inputs whose (band, bucket) SET is unchanged — readers are
-  set-semantics joins, so even a crash between the base write and the
-  directory deletions (leaving rows duplicated between base and
-  un-deleted batch dirs) changes no verdict. A base without ``_SUCCESS``
-  (torn write) is ignored by the reader and rewritten on replay.
+  most the last in-flight batch, so a folded id can never be replayed).
+  A crash between the base write and the directory deletions leaves rows
+  duplicated between base and un-deleted batch dirs, which changes no
+  verdict (readers are set-semantics joins); the replayed compaction
+  finds ``_base/v=<id>`` complete, leaves it untouched and only finishes
+  the deletions. A base without ``_SUCCESS`` (torn write) is ignored by
+  the reader and rewritten with ``overwrite`` on replay, from inputs
+  whose (band, bucket) SET is unchanged.
 
 First-seen-wins semantics (pinned by the batch-twin test):
 
@@ -131,13 +132,16 @@ def _maybe_compact(spark, state_dir: str, batch_id: int, every: int) -> None:
         return
     srcs = ([base] if base else []) + fold
     dest = os.path.join(state_dir, _BASE_SUBDIR, f"v={batch_id}")
-    (
-        spark.read.parquet(*srcs)
-        .select("band", "bucket")
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(dest)
-    )
+    # a replay whose base write already completed has only the deletions
+    # left; rewriting would read and overwrite the base in one write
+    if base != dest:
+        (
+            spark.read.parquet(*srcs)
+            .select("band", "bucket")
+            .distinct()
+            .write.mode("overwrite")
+            .parquet(dest)
+        )
     # deletions are best-effort: a leftover dir only duplicates rows the
     # set-semantics reader already has
     for p in srcs:

@@ -7,7 +7,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from intelligent_ocr_spark.plans.checkpoint import read_table_dir
+from intelligent_ocr_spark.operators.extract import EXTRACT_SCHEMA
+from intelligent_ocr_spark.plans.checkpoint import read_committed, read_table_dir
 from intelligent_ocr_spark.plans.pipeline import (
     IntegrityError,
     finalize_with_fallback,
@@ -232,3 +233,53 @@ def test_fallback_finalize(spark, tmp_path):
     fb = final.filter(F.col("is_fallback"))
     assert fb.count() == N // 20
     assert final.filter(F.col("final_text").isNull()).count() == 0
+
+
+def _row_checksum(spark, out):
+    """Order-free full-row checksum of the committed data, all 13 columns."""
+    data = read_committed(spark, out, "data")
+    cols = [F.col(f.name) for f in EXTRACT_SCHEMA.fields]
+    return data.agg(F.count("*"), F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))).collect()[0]
+
+
+def test_input_column_order_and_extra_columns(spark, tmp_path):
+    """The commit stage's Arrow kernel reads its input columns by position;
+    the job must commit the same rows whatever order the caller's columns
+    come in and whatever else the input carries."""
+    inp = pages_df(spark, N, partitions=4)
+    canonical = str(tmp_path / "canonical")
+    run_extraction_job(spark, inp, canonical, SNAPSHOT, num_partitions=4)
+    shuffled = inp.select(
+        "lang", "text", F.lit("extra").alias("extra"), "html", "warc_ts", "url"
+    )
+    reordered = str(tmp_path / "reordered")
+    s = run_extraction_job(spark, shuffled, reordered, SNAPSHOT, num_partitions=4)
+    assert s["docs_processed"] == N and s["integrity_ok"]
+    assert _row_checksum(spark, reordered) == _row_checksum(spark, canonical)
+
+
+def test_warc_ts_instant_survives_session_time_zone(spark, tmp_path):
+    """Under a non-UTC session time zone the committed ``warc_ts`` is the
+    same instant as the input's, not shifted by the zone offset."""
+    src = str(tmp_path / "pages")
+    # the generator's timestamps depend on the session zone: fix them
+    # under UTC before the zone changes
+    pages_df(spark, 40, partitions=2).write.parquet(src)
+    out = str(tmp_path / "out")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        inp = spark.read.parquet(src)
+        s = run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=2)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert s["docs_processed"] == 40
+    committed = read_committed(spark, out, "data").select(
+        "url", F.unix_micros("warc_ts").alias("out_us")
+    )
+    source = spark.read.parquet(src).select(
+        "url", F.unix_micros("warc_ts").alias("in_us")
+    )
+    joined = committed.join(source, "url")
+    assert joined.count() == 40
+    assert joined.filter(F.col("out_us") != F.col("in_us")).count() == 0

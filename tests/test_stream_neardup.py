@@ -162,3 +162,30 @@ def test_torn_batch_replay_overwrites(spark, tmp_path):
         .count()
         == 0
     )
+
+
+def test_compaction_replay_keeps_complete_base(spark, tmp_path):
+    """A compaction torn between its base write and its deletions: on
+    replay the complete ``_base/v=<id>`` is left untouched (never read
+    and overwritten in one write) and only the leftover fold dirs go."""
+    from intelligent_ocr_spark.streaming.neardup import _maybe_compact
+
+    state = tmp_path / "state"
+    schema = "band int, bucket string"
+    for bid in (0, 1):
+        spark.createDataFrame([(0, f"b{bid}")], schema).write.parquet(
+            str(state / f"batch={bid}")
+        )
+    base = state / "_base" / "v=2"
+    spark.createDataFrame([(0, "b0"), (0, "b1")], schema).write.parquet(str(base))
+
+    def snapshot():
+        return sorted(
+            (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(base)
+        )
+
+    before = snapshot()
+    _maybe_compact(spark, str(state), 2, 2)
+    assert snapshot() == before
+    assert sorted(os.listdir(state)) == ["_base"]
+    assert sorted(os.listdir(state / "_base")) == ["v=2"]
