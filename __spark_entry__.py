@@ -4240,368 +4240,6 @@ def q_mm_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "mm_video_frames",
-    """
-    SELECT doc_id,
-           CAST(f AS INT) AS frame_idx,
-           CAST(1 + doc_id % 6 AS INT) AS n_frames,
-           CAST(CASE doc_id % 3 WHEN 0 THEN 10 WHEN 1 THEN 24
-                                ELSE 30 END AS DOUBLE) AS fps,
-           CAST(16 + (doc_id * 3) % 24 AS INT) AS width,
-           CAST(16 + (doc_id * 5) % 24 AS INT) AS height,
-           ((doc_id + f) % 3 = 0) AS is_blank
-    FROM (SELECT doc_id,
-                 unnest(range(0, CAST(1 + doc_id % 6 AS BIGINT), 2)) AS f
-          FROM documents WHERE doc_id < 80)
-    ORDER BY doc_id, frame_idx
-    """,
-)
-def q_mm_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MJPEG-in-AVI demux + per-frame decode, oracle-checked (the
-    video sibling of ``mm_audio_stats``): every doc gets a genuine AVI
-    container — ``1 + doc_id % 6`` JPEG frames of closed-form dims,
-    frame ``i`` uniform (⇒ blank) iff ``(doc_id + i) % 3 == 0``, fps
-    cycling 10/24/30 via the stream header's rate/scale — then every
-    2nd frame is sampled. Width/height/blankness come from the DECODED
-    pixels (not container headers), so the chunk walk, the per-frame
-    JPEG expansion and the sampling fan-out are all on the hash."""
-    import numpy as np
-    import pandas as pd
-
-    from intelligent_ocr_spark.operators.video import (
-        encode_avi_mjpeg,
-        sample_video_frames,
-    )
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 80).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nf = 1 + i % 6
-                w = 16 + (i * 3) % 24
-                h = 16 + (i * 5) % 24
-                fps = [10, 24, 30][i % 3]
-                frames = []
-                for k in range(nf):
-                    if (i + k) % 3 == 0:
-                        arr = np.full((h, w, 3), 40 + (i + k) % 160, dtype=np.uint8)
-                    else:
-                        g = np.linspace((i + k) % 50, 200 + (i + k) % 55, h * w)
-                        g = g.reshape(h, w).astype(np.uint8)
-                        arr = np.repeat(g[:, :, None], 3, axis=2)
-                    frames.append(arr)
-                media = encode_avi_mjpeg(frames, fps=fps)
-                out.append({"doc_id": i, "media": media})
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    media = d.mapInPandas(gen, "doc_id long, media binary")
-    return (
-        sample_video_frames(media, every_n=2)
-        .drop("frame_md5")
-        .orderBy("doc_id", "frame_idx")
-    )
-
-
-@_q(
-    "mm_image_near_dups",
-    """
-    SELECT doc_id AS doc_a, doc_id + 40 AS doc_b, CAST(0 AS INT) AS hamming
-    FROM documents WHERE doc_id < 40
-    UNION ALL
-    SELECT doc_id, doc_id + 80, CAST(0 AS INT)
-    FROM documents WHERE doc_id < 40
-    UNION ALL
-    SELECT doc_id + 40, doc_id + 80, CAST(0 AS INT)
-    FROM documents WHERE doc_id < 40
-    ORDER BY doc_a, doc_b
-    """,
-)
-def q_mm_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image near-dedup, oracle-checked end to end: docs
-    come in 40 groups of three, each group a seeded noise PNG plus two
-    uniform-brightness replicas (+7 / −9, clipping-free range) — dHash
-    compares integer channel-sums that all shift equally, so replica
-    hashes are PROVABLY bit-identical and every within-group pair
-    surfaces at Hamming 0 through the banded join, while distinct noise
-    bases sit ~32 bits apart and never pair. The oracle enumerates the
-    3×40 expected pairs in closed form; decode, hashing, banding and
-    the distance filter are all on the hash."""
-    import numpy as np
-    import pandas as pd
-
-    from intelligent_ocr_spark.operators.imagehash import image_near_dups
-    from intelligent_ocr_spark.operators.multimodal import encode_png
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                g, r = i % 40, i // 40
-                rng = np.random.default_rng(g)
-                w = 16 + (g * 3) % 17
-                h = 16 + (g * 5) % 17
-                base = rng.integers(40, 190, size=(h, w, 3), dtype=np.uint8)
-                img = (base.astype(np.int16) + [0, 7, -9][r]).astype(np.uint8)
-                out.append({"doc_id": i, "media": encode_png(img)})
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    media = d.mapInPandas(gen, "doc_id long, media binary")
-    return image_near_dups(media, method="dhash", max_hamming=3).orderBy(
-        "doc_a", "doc_b"
-    )
-
-
-@_q(
-    "mm_video_near_dups",
-    """
-    SELECT doc_id AS doc_a, doc_id + 20 AS doc_b,
-           CAST(2 AS BIGINT) AS n_frame_pairs, CAST(0 AS INT) AS min_hamming
-    FROM documents WHERE doc_id < 20
-    UNION ALL
-    SELECT doc_id, doc_id + 40, CAST(2 AS BIGINT), CAST(0 AS INT)
-    FROM documents WHERE doc_id < 20
-    UNION ALL
-    SELECT doc_id + 20, doc_id + 40, CAST(2 AS BIGINT), CAST(0 AS INT)
-    FROM documents WHERE doc_id < 20
-    ORDER BY doc_a, doc_b
-    """,
-)
-def q_mm_video_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video near-dedup on decoded MJPEG keyframes, oracle-checked end
-    to end: docs come in 20 groups of three re-encodes of "the same
-    clip" — the two SAMPLED keyframes (frames 0 and 2 under every_n=2)
-    are byte-identical seeded noise across replicas, the unsampled odd
-    frames are replica-private — so each within-group pair must surface
-    with exactly ``n_frame_pairs = 2`` at ``min_hamming = 0`` (MJPEG
-    decode is deterministic: identical source pixels → identical JPEG
-    bytes → identical decoded pixels → provably identical dHash), while
-    distinct groups' noise frames sit ~32 bits apart and never pair.
-    The oracle enumerates the 3×20 expected video pairs in closed form;
-    demux, per-frame decode, keyframe sampling, banding, the Hamming
-    filter and the video-level rollup are all on the hash."""
-    import numpy as np
-    import pandas as pd
-
-    from intelligent_ocr_spark.operators.imagehash import video_near_dups
-    from intelligent_ocr_spark.operators.video import encode_avi_mjpeg
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                g, r = i % 20, i // 20
-                frames = []
-                for k in range(4):
-                    seed = 1000 * g + k if k % 2 == 0 else 7777 + 100 * g + 10 * r + k
-                    rng = np.random.default_rng(seed)
-                    w = 16 + (g * 3) % 17
-                    h = 16 + (g * 5) % 17
-                    frames.append(
-                        rng.integers(40, 190, size=(h, w, 3), dtype=np.uint8)
-                    )
-                out.append({"doc_id": i, "media": encode_avi_mjpeg(frames, fps=10)})
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    media = d.mapInPandas(gen, "doc_id long, media binary")
-    return video_near_dups(media, every_n=2, max_hamming=3).orderBy("doc_a", "doc_b")
-
-
-@_q(
-    "mm_media_metadata",
-    """
-    WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 60)
-    SELECT * FROM (
-      SELECT doc_id, 'riff_info' AS source, 'title' AS key, 'INAM' AS raw_key,
-             'title-' || CAST(doc_id AS VARCHAR) AS value
-      FROM d WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT doc_id, 'riff_info', 'software', 'ISFT', 'sparkocr'
-      FROM d WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT doc_id, 'id3v2', 'encoder', 'TENC', 'enc-' || CAST(doc_id AS VARCHAR)
-      FROM d WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT doc_id, 'png_text', 'Author', 'tEXt', 'auth-' || CAST(doc_id AS VARCHAR)
-      FROM d WHERE doc_id % 5 = 1
-      UNION ALL
-      SELECT doc_id, 'png_text', 'Comment', 'iTXt', 'café-' || CAST(doc_id AS VARCHAR)
-      FROM d WHERE doc_id % 5 = 1
-      UNION ALL
-      SELECT doc_id, 'jpeg_com', 'comment', 'COM', 'first-' || CAST(doc_id AS VARCHAR)
-      FROM d WHERE doc_id % 5 = 2
-      UNION ALL
-      SELECT doc_id, 'jpeg_com', 'comment1', 'COM', 'second-' || CAST(doc_id AS VARCHAR)
-      FROM d WHERE doc_id % 5 = 2
-      UNION ALL
-      SELECT doc_id, 'gif_comment', 'comment', '0xFE', 'gif-' || CAST(doc_id AS VARCHAR)
-      FROM d WHERE doc_id % 5 = 3
-      UNION ALL
-      SELECT doc_id, 'id3v2', 'title', 'TIT2', 'song-' || CAST(doc_id AS VARCHAR)
-      FROM d WHERE doc_id % 5 = 4
-      UNION ALL
-      SELECT doc_id, 'id3v2', 'artist', 'TPE1', 'artist-' || CAST(doc_id AS VARCHAR)
-      FROM d WHERE doc_id % 5 = 4
-      UNION ALL
-      SELECT doc_id, 'id3v1', 'title', 'title', 'v1-' || CAST(doc_id AS VARCHAR)
-      FROM d WHERE doc_id % 5 = 4
-      UNION ALL
-      SELECT doc_id, 'id3v1', 'track', 'track', '7' FROM d WHERE doc_id % 5 = 4
-      UNION ALL
-      SELECT doc_id, 'id3v1', 'genre', 'genre', '17' FROM d WHERE doc_id % 5 = 4
-    )
-    ORDER BY doc_id, source, raw_key, key, value
-    """,
-)
-def q_mm_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedded-media metadata census, oracle-checked end to end over
-    REAL spliced payloads from every builder twin: WAV carrying a RIFF
-    LIST/INFO block plus an embedded ``id3 `` ID3v2.3 chunk, PNG with
-    tEXt (latin-1) and uncompressed iTXt (UTF-8 — the é round-trips),
-    JPEG with two COM segments, GIF with a comment extension after the
-    global color table, and a standalone ID3v2.4 tag with an ID3v1.1
-    trailer (track-byte convention + numeric genre). The oracle states
-    every expected (source, key, raw_key, value) row in closed form;
-    extraction is the standard zero-exchange Scan→MapInPandas media
-    stage with a 1-row→n-tags fan-out."""
-    import numpy as np
-    import pandas as pd
-
-    from intelligent_ocr_spark.operators.audio import encode_wav
-    from intelligent_ocr_spark.operators.metadata import (
-        encode_id3v1_tail,
-        encode_id3v2,
-        extract_media_metadata,
-        gif_with_comment,
-        jpeg_with_comment,
-        png_with_text,
-        with_riff_metadata,
-    )
-    from intelligent_ocr_spark.operators.multimodal import (
-        encode_gif,
-        encode_jpeg,
-        encode_png,
-    )
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                arr = np.full((8, 8, 3), 30 + i % 200, dtype=np.uint8)
-                if i % 5 == 0:
-                    media = with_riff_metadata(
-                        encode_wav(np.zeros((16, 1)), 8000, bits=16),
-                        info={"INAM": f"title-{i}", "ISFT": "sparkocr"},
-                        id3_tags={"TENC": f"enc-{i}"},
-                    )
-                elif i % 5 == 1:
-                    media = png_with_text(encode_png(arr), {"Author": f"auth-{i}"})
-                    media = png_with_text(media, {"Comment": f"café-{i}"}, itxt=True)
-                elif i % 5 == 2:
-                    media = jpeg_with_comment(
-                        encode_jpeg(arr), f"first-{i}", f"second-{i}"
-                    )
-                elif i % 5 == 3:
-                    media = gif_with_comment(encode_gif(arr), f"gif-{i}")
-                else:
-                    media = (
-                        encode_id3v2(
-                            {"TIT2": f"song-{i}", "TPE1": f"artist-{i}"}, version=4
-                        )
-                        + b"\x00" * 64
-                        + encode_id3v1_tail(title=f"v1-{i}", track=7, genre=17)
-                    )
-                out.append({"doc_id": i, "media": media})
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    media = d.mapInPandas(gen, "doc_id long, media binary")
-    return extract_media_metadata(media).orderBy(
-        "doc_id", "source", "raw_key", "key", "value"
-    )
-
-
-@_q(
-    "mm_exif_tags",
-    """
-    WITH d AS (SELECT doc_id AS i FROM documents WHERE doc_id < 48)
-    SELECT * FROM (
-      SELECT i AS doc_id, 'exif' AS source, 'make' AS key, '0x010f' AS raw_key,
-             'Cam-' || CAST(i AS VARCHAR) AS value FROM d
-      UNION ALL
-      SELECT i, 'exif', 'orientation', '0x0112', CAST(1 + i % 8 AS VARCHAR) FROM d
-      UNION ALL
-      SELECT i, 'exif', 'exposure_time', '0x829a',
-             '1/' || CAST(125 + i AS VARCHAR) FROM d
-      UNION ALL
-      SELECT i, 'exif_gps', 'gps_latitude_ref', '0x0001',
-             CASE WHEN i % 2 = 0 THEN 'N' ELSE 'S' END FROM d
-      UNION ALL
-      SELECT i, 'exif_gps', 'gps_latitude', '0x0002',
-             CAST(i AS VARCHAR) || '/1 ' || CAST((i * 2) % 60 AS VARCHAR)
-             || '/1 ' || CAST((i * 100) % 6000 AS VARCHAR) || '/100' FROM d
-    )
-    ORDER BY doc_id, source, raw_key, key, value
-    """,
-)
-def q_mm_exif_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exif provenance-tag census over real JPEGs carrying a full
-    APP1/TIFF structure — IFD0 string + SHORT + offset-indirect
-    RATIONAL values and a GPS IFD reached through the 0x8825 pointer,
-    alternating little- and big-endian TIFF byte orders per doc so both
-    paths are driver-verified. The oracle states every expected (source,
-    key, raw_key, value) row in closed form, including the canonical
-    rational rendering of latitudes."""
-    import numpy as np
-    import pandas as pd
-
-    from intelligent_ocr_spark.operators.metadata import (
-        extract_media_metadata,
-        jpeg_with_exif,
-    )
-    from intelligent_ocr_spark.operators.multimodal import encode_jpeg
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 48).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                arr = np.full((8, 8, 3), 30 + i % 200, dtype=np.uint8)
-                media = jpeg_with_exif(
-                    encode_jpeg(arr),
-                    {
-                        0x010F: f"Cam-{i}",
-                        0x0112: 1 + i % 8,
-                        0x829A: (1, 125 + i),
-                    },
-                    {
-                        1: "N" if i % 2 == 0 else "S",
-                        2: [(i, 1), ((i * 2) % 60, 1), ((i * 100) % 6000, 100)],
-                    },
-                    byte_order="little" if i % 2 == 0 else "big",
-                )
-                out.append({"doc_id": i, "media": media})
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    media = d.mapInPandas(gen, "doc_id long, media binary")
-    return extract_media_metadata(media).orderBy(
-        "doc_id", "source", "raw_key", "key", "value"
-    )
-
-
-@_q(
     "web_pagerank",
     """
     WITH RECURSIVE
@@ -6063,103 +5701,6 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "pipeline_media_census",
-    """
-    WITH d AS (SELECT doc_id AS i FROM documents WHERE doc_id < 70),
-    c AS (SELECT i % 7 AS b, COUNT(*) AS n FROM d GROUP BY 1)
-    SELECT * FROM (
-      SELECT 'image/png' AS media_type, 'png_text' AS source,
-             'Author' AS key, n AS n_tags FROM c WHERE b = 0
-      UNION ALL
-      SELECT 'image/gif', 'gif_comment', 'comment', n FROM c WHERE b = 1
-      UNION ALL
-      SELECT 'audio/wav', 'riff_info', 'title', n FROM c WHERE b = 2
-      UNION ALL
-      SELECT 'image/jpeg', 'jpeg_com', 'comment', n FROM c WHERE b = 3
-      UNION ALL
-      SELECT 'image/jpeg', 'exif', 'make', n FROM c WHERE b = 4
-      UNION ALL
-      SELECT 'audio/wav', 'id3v2', 'encoder', n FROM c WHERE b = 5
-      UNION ALL
-      SELECT 'video/avi', 'riff_info', 'software', n FROM c WHERE b = 6
-    )
-    ORDER BY media_type, source, key
-    """,
-)
-def q_pipeline_media_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed provenance census: JVM magic-byte type sniff →
-    embedded-metadata extraction → per-(media_type, source, key) tag
-    counts, over a mixed corpus where every one of the seven media
-    branches carries a different tag family (PNG tEXt, GIF comment,
-    WAV INFO, JPEG COM, JPEG Exif, WAV-embedded ID3v2, AVI INFO). The
-    oracle derives branch populations from the documents table and
-    states the census in closed form. Plan shape: the sniff is a
-    codegen column on the same projection the metadata stage scans, so
-    the only exchanges are the doc_id-keyed type join and the census
-    groupBy — both on short keys, both AQE-managed; at production
-    scale the type column would be fused into the extraction stage's
-    output instead of re-joined."""
-    import numpy as np
-    import pandas as pd
-
-    from intelligent_ocr_spark.operators.audio import encode_wav
-    from intelligent_ocr_spark.operators.metadata import (
-        extract_media_metadata,
-        gif_with_comment,
-        jpeg_with_comment,
-        jpeg_with_exif,
-        png_with_text,
-        with_riff_metadata,
-    )
-    from intelligent_ocr_spark.operators.multimodal import (
-        encode_gif,
-        encode_jpeg,
-        encode_png,
-        media_type_col,
-    )
-    from intelligent_ocr_spark.operators.video import encode_avi_mjpeg
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 70).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                arr = np.full((8, 8, 3), 30 + i % 200, dtype=np.uint8)
-                wav = encode_wav(np.zeros((16, 1)), 8000, bits=16)
-                b = i % 7
-                if b == 0:
-                    media = png_with_text(encode_png(arr), {"Author": f"a{i}"})
-                elif b == 1:
-                    media = gif_with_comment(encode_gif(arr), f"g{i}")
-                elif b == 2:
-                    media = with_riff_metadata(wav, info={"INAM": f"t{i}"})
-                elif b == 3:
-                    media = jpeg_with_comment(encode_jpeg(arr), f"c{i}")
-                elif b == 4:
-                    media = jpeg_with_exif(encode_jpeg(arr), {0x010F: f"m{i}"})
-                elif b == 5:
-                    media = with_riff_metadata(wav, id3_tags={"TENC": f"e{i}"})
-                else:
-                    media = with_riff_metadata(
-                        encode_avi_mjpeg([arr], fps=10), info={"ISFT": f"s{i}"}
-                    )
-                out.append({"doc_id": i, "media": media})
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    media = d.mapInPandas(gen, "doc_id long, media binary")
-    typed = media.select("doc_id", media_type_col("media").alias("media_type"))
-    tags = extract_media_metadata(media)
-    return (
-        tags.join(typed, "doc_id")
-        .groupBy("media_type", "source", "key")
-        .agg(F.count(F.lit(1)).alias("n_tags"))
-        .orderBy("media_type", "source", "key")
-    )
-
-
-@_q(
     "mm_audio_resample",
     """
     WITH d AS (
@@ -6212,212 +5753,6 @@ def q_mm_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     up = resample_audio_stats(media.filter(F.col("doc_id") % 2 == 0), 16000)
     down = resample_audio_stats(media.filter(F.col("doc_id") % 2 == 1), 4000)
     return up.unionByName(down).orderBy("doc_id")
-
-
-@_q(
-    "mm_media_type",
-    """
-    SELECT doc_id,
-           CASE WHEN doc_id % 11 = 0 THEN 'unknown'
-                WHEN doc_id % 7 = 0 THEN 'image/png'
-                WHEN doc_id % 7 = 1 THEN 'image/gif'
-                WHEN doc_id % 7 = 2 THEN 'image/bmp'
-                WHEN doc_id % 7 = 3 THEN 'image/x-portable-pixmap'
-                WHEN doc_id % 7 = 4 THEN 'image/jpeg'
-                WHEN doc_id % 7 = 5 THEN 'audio/wav'
-                ELSE 'video/avi' END AS media_type
-    FROM documents WHERE doc_id < 140 ORDER BY doc_id
-    """,
-)
-def q_mm_media_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Magic-byte media-type sniff as a pure JVM column expression,
-    oracle-checked over REAL payloads from every encoder twin (PNG,
-    GIF, BMP, netpbm, JPEG, WAV, AVI) plus non-media bytes — the
-    content-type census a crawl pipeline runs before routing media to
-    decoders, with zero Python in the plan."""
-    import numpy as np
-    import pandas as pd
-
-    from intelligent_ocr_spark.operators.audio import encode_wav
-    from intelligent_ocr_spark.operators.multimodal import (
-        encode_bmp,
-        encode_gif,
-        encode_jpeg,
-        encode_png,
-        media_type_col,
-    )
-    from intelligent_ocr_spark.operators.video import encode_avi_mjpeg
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 140).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                arr = np.full((8, 8, 3), 30 + i % 200, dtype=np.uint8)
-                if i % 11 == 0:
-                    media = b"\x00<not media>" + bytes([i % 251]) * 16
-                elif i % 7 == 0:
-                    media = encode_png(arr)
-                elif i % 7 == 1:
-                    media = encode_gif(arr)
-                elif i % 7 == 2:
-                    media = encode_bmp(arr)
-                elif i % 7 == 3:
-                    media = b"P6\n8 8\n255\n" + bytes(arr.tobytes())
-                elif i % 7 == 4:
-                    media = encode_jpeg(arr)
-                elif i % 7 == 5:
-                    media = encode_wav(np.zeros((16, 1)), 8000, bits=16)
-                else:
-                    media = encode_avi_mjpeg([arr], fps=10)
-                out.append({"doc_id": i, "media": media})
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    media = d.mapInPandas(gen, "doc_id long, media binary")
-    return media.select(
-        "doc_id", media_type_col("media").alias("media_type")
-    ).orderBy("doc_id")
-
-
-@_q(
-    "mm_av_stats",
-    """
-    WITH p AS (
-      SELECT doc_id,
-             1 + doc_id % 4 AS nf,
-             CAST(CASE doc_id % 3 WHEN 0 THEN 10 WHEN 1 THEN 24
-                                  ELSE 30 END AS DOUBLE) AS fps,
-             32 + (doc_id * 5) % 160 AS an,
-             CAST(256 + (doc_id * 813) % 30000 AS DOUBLE) / 32768 AS s
-      FROM documents WHERE doc_id < 60
-    )
-    SELECT doc_id,
-           CAST(nf AS INT) AS n_frames,
-           fps,
-           CAST(16 AS INT) AS width,
-           CAST(16 AS INT) AS height,
-           CAST(nf AS DOUBLE) / fps AS v_duration_s,
-           CAST(8000 AS INT) AS a_rate,
-           CAST(1 AS INT) AS a_channels,
-           CAST(an AS BIGINT) AS a_frames,
-           CAST(an AS DOUBLE) / 8000 AS a_duration_s,
-           s AS a_rms,
-           s AS a_peak
-    FROM p ORDER BY doc_id
-    """,
-)
-def q_mm_av_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Joint audio/video container stats, oracle-checked: every doc is
-    an AVI with both a ``vids`` MJPEG stream (``1 + doc_id % 4`` frames,
-    fps cycling 10/24/30) and an ``auds`` PCM16 stream (a dyadic square
-    wave of closed-form length and amplitude in a ``01wb`` chunk) —
-    the decode must demux BOTH streams, expand the video frames, run
-    the WAVEFORMAT codec core on the audio bytes, and report exact
-    per-stream durations and levels for the hash to land."""
-    import numpy as np
-    import pandas as pd
-
-    from intelligent_ocr_spark.operators.video import (
-        decode_av_stats,
-        encode_avi_mjpeg,
-    )
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nf = 1 + i % 4
-                fps = [10, 24, 30][i % 3]
-                an = 32 + (i * 5) % 160
-                amp = (256 + (i * 813) % 30000) / 32768.0
-                frames = []
-                for k in range(nf):
-                    g = np.linspace((i + k) % 50, 200 + (i + k) % 55, 256)
-                    frames.append(
-                        np.repeat(
-                            g.reshape(16, 16).astype(np.uint8)[:, :, None], 3, axis=2
-                        )
-                    )
-                pat = np.array([amp, amp, -amp, -amp], dtype=np.float64)
-                aud = np.tile(pat, an // 4 + 1)[:an][:, None]
-                media = encode_avi_mjpeg(frames, fps=fps, audio=(aud, 8000))
-                out.append({"doc_id": i, "media": media})
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    media = d.mapInPandas(gen, "doc_id long, media binary")
-    return decode_av_stats(media).orderBy("doc_id")
-
-
-@_q(
-    "pipeline_multimodal_dedup",
-    """
-    SELECT doc_id,
-           CAST(12 + (doc_id * 3) % 50 AS INT) AS width,
-           CAST(12 + (doc_id * 11) % 50 AS INT) AS height
-    FROM documents WHERE doc_id < 40 AND doc_id % 3 <> 0 ORDER BY doc_id
-    """,
-)
-def q_pipeline_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed multimodal corpus pipeline, oracle-checked end to end:
-    real decode (mixed PNG/JPEG, interlace and progressive variants) →
-    blank gate → exact dedup on the decoded content hash keeping the
-    smallest doc_id. Media bytes are keyed by ``doc_id % 40`` so every
-    group of 3 docs carries byte-identical payloads; the oracle's
-    survivor set (one non-blank doc per group, dims closed forms of the
-    group key) only hashes if decode, gating and the relational dedup
-    all compose exactly — the image twin of ``pipeline_quality_dedup``."""
-    import numpy as np
-    import pandas as pd
-
-    from intelligent_ocr_spark.operators.multimodal import (
-        decode_image_stats,
-        encode_jpeg,
-        encode_jpeg_progressive,
-        encode_png,
-    )
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                g = i % 40  # content group: 3 byte-identical docs each
-                w = 12 + (g * 3) % 50
-                h = 12 + (g * 11) % 50
-                rng = np.random.default_rng(g)
-                if g % 3 == 0:
-                    arr = np.full((h, w, 3), 150, dtype=np.uint8)  # blank
-                else:
-                    arr = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                if g % 2 == 0:
-                    media = encode_png(arr, interlace=(g % 4 == 0))
-                elif g % 5 == 1:
-                    media = encode_jpeg_progressive(arr, successive=(g % 10 == 1))
-                else:
-                    media = encode_jpeg(arr, subsample=[False, True, "422"][g % 3])
-                out.append({"doc_id": i, "media": media})
-            yield pd.DataFrame(out, columns=["doc_id", "media"])
-
-    media = d.mapInPandas(gen, "doc_id long, media binary")
-    stats = decode_image_stats(media)
-    return (
-        stats.filter(~F.col("is_blank"))
-        .groupBy("content_md5")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.first("width").alias("width"),
-            F.first("height").alias("height"),
-        )
-        .select("doc_id", "width", "height")
-        .orderBy("doc_id")
-    )
 
 
 @_q(

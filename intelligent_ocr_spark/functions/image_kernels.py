@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["to_grayscale", "edge_magnitude", "is_blank_image", "adaptive_zoom", "rgb_to_bgr"]
+__all__ = ["to_grayscale", "edge_magnitude", "is_blank_image", "adaptive_zoom"]
 
 
 def to_grayscale(img: np.ndarray) -> np.ndarray:
@@ -66,11 +66,3 @@ def adaptive_zoom(
     if base_pixels > max_pixels:
         zoom *= (max_pixels / base_pixels) ** 0.5
     return zoom
-
-
-def rgb_to_bgr(img: np.ndarray) -> np.ndarray:
-    """Channel reverse for 3-channel arrays (reference
-    ``core/pdf_processor.py:590-592``)."""
-    if img.ndim == 3 and img.shape[2] == 3:
-        return img[:, :, ::-1].copy()
-    return img

@@ -274,9 +274,8 @@ def decode_wav(payload: bytes):
 
 def decode_fmt_data(fmt: bytes, data: bytes, fact_frames: int | None = None):
     """WAVEFORMAT(EX) header bytes + raw sample data → (samples, rate,
-    channels, bits) — the codec core shared by :func:`decode_wav` and
-    the AVI ``auds`` stream path (an AVI audio ``strf`` IS this same
-    structure)."""
+    channels, bits) — the codec core of :func:`decode_wav` (an AVI
+    audio ``strf`` is this same structure)."""
     if len(fmt) < 16:
         return None
     tag = int.from_bytes(fmt[0:2], "little")
@@ -489,8 +488,8 @@ def segment_audio(
     exact frame bounds and per-segment RMS/peak — the cheap classical
     pre-filter a speech-corpus pipeline runs before anything expensive.
 
-    Spark shape: the same zero-exchange 1-row→n-segments mapInPandas
-    fan-out as :func:`video.sample_video_frames`; undecodable media →
+    Spark shape: the same zero-exchange 1-row→n-rows mapInPandas
+    fan-out as :func:`multimodal.sample_frames`; undecodable media →
     one quarantined row (seg_idx NULL).
     """
     pruned = ensure_parallelism(df.select(id_col, media_col))

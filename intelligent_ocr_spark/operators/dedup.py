@@ -423,6 +423,11 @@ def ngram_jaccard_pairs(
     capped shingles from both sides keeps the statistic a true Jaccard
     over the capped universe; mixing capped sizes with uncapped
     intersections would systematically understate similarity.
+
+    Caveat: the capped shingle table is ``localCheckpoint``-ed, which runs
+    a Spark job while the DataFrame is built and keeps its blocks on the
+    executors without replication. Losing an executor then loses the
+    truncated lineage, and the query fails instead of recomputing.
     """
     sh = ensure_parallelism(df).select(
         F.col(id_col).alias("doc_id"),
@@ -996,6 +1001,12 @@ def lsh_verified_pairs(
     Reference parity: the reference dedups at file granularity by exact
     content hash only (``core/checkpoint.py``); corpus-level verified
     near-dup is part of the web-corpus extension this engine adds.
+
+    Caveat: the two multiply-consumed subtrees are ``localCheckpoint``-ed,
+    which runs Spark jobs while the DataFrame is built and keeps their
+    blocks on the executors without replication. Losing an executor then
+    loses the truncated lineage, and the query fails instead of
+    recomputing.
     """
     # eager localCheckpoint on the two multiply-consumed subtrees (the
     # discipline near_dup_clusters and suffix_array_levels already use):

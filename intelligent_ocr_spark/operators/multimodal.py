@@ -1,4 +1,4 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary``
+"""Multimodal column plumbing: image/audio as opaque ``binary``
 columns with typed metadata.
 
 The Spark-side contract (schema, partitioning, Arrow batch shape, UDF
@@ -13,8 +13,7 @@ AND progressive (T.81 Annex G spectral selection + successive
 approximation) — each spec-faithful, round-trip tested against its
 encoder twin plus hand-computed known-answer byte vectors — and a
 deterministic fake for anything else so every downstream stage still
-runs real numpy on real shapes. Only video codecs beyond MJPEG (see
-``video.py``) remain the environment-bound seam.
+runs real numpy on real shapes. Video decode is not implemented.
 
 Pattern mirrors the extraction engine: decode + feature-extract fused into
 ONE ``mapInPandas`` stage, module-level singleton for any heavyweight codec
@@ -1794,10 +1793,9 @@ def sample_frames(
     into fixed 4KiB 'frames', keep every ``every_n``-th, emit one row
     per kept frame.
 
-    The REAL container demuxer this byte-slicer stands in for exists as
-    :func:`video.sample_video_frames` (MJPEG-in-AVI, decoded pixels);
-    this variant stays for media whose container format is unknown —
-    the fan-out shape (1 row → m rows inside mapInPandas) is identical.
+    A stand-in for a real container demuxer, for media whose container
+    format is unknown; the fan-out shape is 1 row → m rows inside
+    mapInPandas.
     """
     pruned = ensure_parallelism(df.select(id_col, media_col))
 

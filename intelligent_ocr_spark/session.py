@@ -23,7 +23,8 @@ Scale notes (100 TB / 1000-executor design, tested on local[N]):
   Python-worker-daemon initialization — cost that belongs to session
   startup, not to whichever query happens to run first. The warm-up runs
   a tiny shuffled aggregate, a tiny parquet round-trip and one
-  mapInPandas task per core (importing the hot kernels), exactly the
+  mapInArrow task per core (importing the extraction kernel through the
+  same Arrow boundary ``extract_pages`` and the job's commit use), the
   steady-state discipline the extraction bench child already applies to
   its own timed section. Disable with SPARK_GRAFT_WARM_SESSION=0.
 """
@@ -82,18 +83,16 @@ def _warm_session(spark: SparkSession, cores: int) -> None:
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
-    # Python workers: one task per core importing the hot kernel modules
+    # Python workers: one task per core importing the extraction kernel
     # (worker reuse keeps the warmed daemons for every later task)
     def _imp(batches):
         import intelligent_ocr_spark.operators.extract  # noqa: F401
-        import intelligent_ocr_spark.operators.multimodal  # noqa: F401
 
-        for pdf in batches:
-            yield pdf
+        yield from batches
 
     (
         spark.range(0, cores * 2, 1, cores * 2)
-        .mapInPandas(_imp, "id long")
+        .mapInArrow(_imp, "id long")
         .write.format("noop")
         .mode("overwrite")
         .save()

@@ -116,41 +116,6 @@ def run_stream_to_parquet(
     )
 
 
-def stream_media_files(
-    spark: SparkSession, path_glob: str, max_files_per_trigger: int = 8
-) -> DataFrame:
-    """Continuous media ingestion: image/audio/video files landing in a
-    directory stream through ``binaryFile`` (exactly-once via the stream
-    checkpoint) as (doc_id, media, media_type) rows — the type column is
-    the JVM-only magic-byte sniff, so routing stays codegen'd even on
-    the streaming path."""
-    from pyspark.sql import functions as F
-
-    from intelligent_ocr_spark.operators.multimodal import media_type_col
-
-    return (
-        spark.readStream.format("binaryFile")
-        .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(path_glob)
-        .select(
-            F.xxhash64("path").alias("doc_id"),
-            F.col("content").alias("media"),
-            media_type_col("content").alias("media_type"),
-        )
-    )
-
-
-def stream_media_stats(media_stream: DataFrame) -> DataFrame:
-    """The fused image decode+stats operator applied to a streaming
-    DataFrame — the batch ``decode_image_stats`` runs unchanged on a
-    stream because it is one stateless ``mapInPandas`` stage (operator
-    reuse is the point, as with ``stream_extract``'s ``mapInArrow``)."""
-    from intelligent_ocr_spark.operators.multimodal import decode_image_stats
-
-    return decode_image_stats(media_stream)
-
-
 def windowed_host_links(pages_stream: DataFrame) -> DataFrame:
     """Streaming link-graph feed: anchors extracted from arriving pages
     (same zero-exchange ``extract_links`` code path as batch — the html

@@ -64,6 +64,10 @@ rows; the per-batch tag is a left-semi join (never a pair join), the
 per-batch state append is one small parquet write, and compaction
 rewrites the base every ``compact_every`` batches (amortized one extra
 pass over the state per K batches).
+
+``state_dir`` must be on a local filesystem: state listing and compaction
+use ``os.listdir`` and ``shutil.rmtree``, which cannot see HDFS or object
+store paths.
 """
 
 from __future__ import annotations

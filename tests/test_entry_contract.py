@@ -8,7 +8,9 @@ The driver verifies only the first ``DRIVER_QUERY_CAP`` entries of
 2. every query skipped last round is inside the cap this round — so no
    query goes more than one round without a driver correctness row;
 3. ``queries()`` and ``oracle_sql()`` share one ordering, and every oracle
-   key is a registered query.
+   key is a registered query;
+4. the query lists the bench and plan-dump tools run by default name only
+   registered queries.
 
 No Spark session needed — pure registry introspection.
 """
@@ -40,6 +42,19 @@ def test_rotation_lists_name_real_queries():
         if n not in order
     ]
     assert not stale, f"rotation bookkeeping names unregistered queries: {stale}"
+
+
+def test_tool_query_lists_name_real_queries():
+    import bench
+    import tools_dump_plans
+
+    order = set(entry.queries())
+    stale = [
+        n
+        for n in bench.HEADLINE_QUERIES + tools_dump_plans.DEFAULT_QUERIES
+        if n not in order
+    ]
+    assert not stale, f"tool query lists name unregistered queries: {stale}"
 
 
 def test_oracles_subset_of_queries_and_same_order():

@@ -7,7 +7,6 @@ from intelligent_ocr_spark.functions.image_kernels import (
     adaptive_zoom,
     edge_magnitude,
     is_blank_image,
-    rgb_to_bgr,
 )
 from intelligent_ocr_spark.functions.layout import (
     Block,
@@ -54,13 +53,6 @@ def test_adaptive_zoom_side_cap():
 def test_adaptive_zoom_pixel_cap():
     z = adaptive_zoom(3800, 3800, 1.0, max_pixels=1_000_000, max_side=3800)
     assert abs((3800 * z) ** 2 - 1_000_000) < 1.0
-
-
-def test_rgb_to_bgr():
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    img[:, :, 0] = 1  # R
-    out = rgb_to_bgr(img)
-    assert out[0, 0, 2] == 1 and out[0, 0, 0] == 0
 
 
 # ---- vertical classification + font size (reference :646-659)

@@ -181,22 +181,20 @@ def test_benchmark_contamination_no_pair_join(spark):
 
 
 def test_media_stat_operators_zero_shuffle(spark, tmp_path):
-    """The three media tiers (image stats, audio stats, video frame
-    sampling) must all stay a single zero-exchange Scan→MapInPandas
-    stage — decode over a 100 TB media column is embarrassingly
+    """The two media tiers (image stats, audio stats) must both stay a
+    single zero-exchange Scan→MapInPandas stage — decode over a 100 TB media column is embarrassingly
     parallel, and any Exchange here would shuffle fat binary rows.
     (Input written at session parallelism so the deliberate small-input
     repartition guard in ensure_parallelism stays out of the plan.)"""
     from intelligent_ocr_spark.operators.audio import decode_audio_stats
     from intelligent_ocr_spark.operators.multimodal import decode_image_stats
-    from intelligent_ocr_spark.operators.video import sample_video_frames
 
     path = str(tmp_path / "media_pages")
     write_pages(spark, 64, path, partitions=8)
     media = spark.read.parquet(path).selectExpr(
         "cast(xxhash64(url) as long) doc_id", "cast(html as binary) media"
     )
-    for op in (decode_image_stats, decode_audio_stats, sample_video_frames):
+    for op in (decode_image_stats, decode_audio_stats):
         plan = _plan(op(media))
         assert "Exchange" not in plan, (op.__name__, plan)
         assert "MapInPandas" in plan, (op.__name__, plan)

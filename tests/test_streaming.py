@@ -142,72 +142,6 @@ def test_stream_warc_gz_ingestion(spark, tmp_path):
     assert 0 < n1 < len(expected)  # second segment arrived in a later batch
 
 
-def test_stream_media_stats_exactly_once(spark, tmp_path):
-    """Media files landing in a directory decode through the SAME batch
-    operator under Structured Streaming: each file ingested exactly once
-    across micro-batches, real dims recovered, type sniff attached."""
-    import numpy as np
-
-    from intelligent_ocr_spark.operators.audio import encode_wav
-    from intelligent_ocr_spark.operators.multimodal import encode_png
-    from intelligent_ocr_spark.streaming.ingest import (
-        stream_media_files,
-        stream_media_stats,
-    )
-
-    media_dir = tmp_path / "media"
-    os.makedirs(media_dir)
-    rng = np.random.default_rng(2)
-    (media_dir / "a.png").write_bytes(
-        encode_png(rng.integers(0, 256, size=(9, 13, 3), dtype=np.uint8))
-    )
-    (media_dir / "b.wav").write_bytes(encode_wav(np.zeros((8, 1)), 8000, bits=16))
-
-    src = stream_media_files(spark, str(media_dir), max_files_per_trigger=1)
-    q = (
-        stream_media_stats(src)
-        .writeStream.format("memory")
-        .queryName("media_stream_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "media_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        (media_dir / "c.png").write_bytes(
-            encode_png(rng.integers(0, 256, size=(5, 7, 3), dtype=np.uint8))
-        )
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT width, height FROM media_stream_out ORDER BY width"
-        ).collect()
-    finally:
-        q.stop()
-    # three files, each exactly once; PNG dims decoded for real (the WAV
-    # payload falls to the deterministic fake with md5-derived dims ≥ 64)
-    dims = [(r.width, r.height) for r in rows]
-    assert len(dims) == 3 and (13, 9) in dims and (7, 5) in dims
-
-    # and the type sniff labels the stream rows without Python
-    q2 = (
-        src.select("media_type")
-        .writeStream.format("memory")
-        .queryName("media_types_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "types_ckpt"))
-        .start()
-    )
-    try:
-        q2.processAllAvailable()
-        types = sorted(
-            r.media_type
-            for r in spark.sql("SELECT media_type FROM media_types_out").collect()
-        )
-    finally:
-        q2.stop()
-    assert types == ["audio/wav", "image/png", "image/png"]
-
-
 def test_windowed_host_links_stream_equals_batch(spark, tmp_path):
     """Streaming link feed: anchors from arriving pages aggregate to
     watermarked per-window per-host counts that exactly match the batch
