@@ -60,10 +60,6 @@ def _dsum(expr, scale: int = 4):
     return F.sum(expr.cast(f"decimal(20,{scale})")).cast("double")
 
 
-def _dsum_sql(expr: str, scale: int = 4) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(20,{scale}))) AS DOUBLE)"
-
-
 # --------------------------------------------------------------------------
 # registry
 # --------------------------------------------------------------------------
@@ -370,34 +366,6 @@ def q_warc_revisit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # relational twins of reference operators (F/J/W/U/A/K/X series)
 # --------------------------------------------------------------------------
-@_q(
-    "q1_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(sum(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) AS sum_base_price,
-           CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(20,4))) AS DOUBLE) AS sum_disc_price,
-           floor(CAST(sum(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) / count(*) * 1e4) / 1e4 AS avg_qty,
-           count(*)                                                    AS count_order
-    FROM lineitem WHERE l_shipdate <= DATE '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("date"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            _dsum(F.col("l_quantity")).alias("sum_qty"),
-            _dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
-            (F.floor(_dsum(F.col("l_quantity")) / F.count("*") * F.lit(1e4)) / F.lit(1e4)).alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
 @_q(
     "f1_existing_text_probe",
     """
@@ -732,308 +700,6 @@ def q_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "q6_forecast_revenue",
-    """
-    SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(20,6))) AS DOUBLE) AS revenue,
-           count(*) AS n
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-      AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-    """,
-)
-def q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q6 shape: pure filter+agg, fully pushed scan, no shuffle of rows
-    li = _t(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(20,6)")).cast("double").alias("revenue"),
-        F.count("*").alias("n"),
-    )
-
-
-@_q(
-    "q12_priority_returns",
-    """
-    SELECT o_orderpriority,
-           CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS returned,
-           CAST(sum(CASE WHEN l_returnflag <> 'R' THEN 1 ELSE 0 END) AS BIGINT) AS kept
-    FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-    GROUP BY o_orderpriority
-    """,
-)
-def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q12 shape: fact-fact join + conditional counts
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)).alias("returned"),
-            F.sum(F.when(F.col("l_returnflag") != "R", 1).otherwise(0)).alias("kept"),
-        )
-    )
-
-
-@_q(
-    "q18_large_volume",
-    """
-    SELECT c.c_custkey, o.o_orderkey, big.sum_qty
-    FROM (
-      SELECT l_orderkey, CAST(sum(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty
-      FROM lineitem GROUP BY l_orderkey
-      HAVING CAST(sum(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) > 300
-    ) big
-    JOIN orders o ON o.o_orderkey = big.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    """,
-)
-def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q18 shape: agg-then-join (having pushes the heavy groupBy
-    # before the joins — never join first)
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(20,4)")).cast("double").alias("sum_qty"))
-        .filter(F.col("sum_qty") > 300)
-    )
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .select("c_custkey", "o_orderkey", "sum_qty")
-    )
-
-
-@_q(
-    "q4_priority_exists",
-    """
-    SELECT o_orderpriority, count(*) AS order_count
-    FROM orders o
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
-      AND EXISTS (SELECT 1 FROM lineitem l
-                  WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
-    GROUP BY o_orderpriority
-    """,
-)
-def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q4 shape: correlated EXISTS → left-semi join with a non-equi term
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        o.join(
-            li,
-            (o.o_orderkey == li.l_orderkey) & (li.l_shipdate > o.o_orderdate),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-@_q(
-    "q13_customer_distribution",
-    """
-    SELECT c_count, count(*) AS custdist FROM (
-      SELECT c_custkey, count(o_orderkey) AS c_count
-      FROM customer LEFT JOIN orders
-        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-      GROUP BY c_custkey
-    ) GROUP BY c_count
-    """,
-)
-def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q13 shape: outer join with residual condition + double aggregation
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    per_cust = (
-        c.join(
-            o, (c.c_custkey == o.o_custkey) & (o.o_orderpriority != "1-URGENT"), "left"
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
-
-
-@_q(
-    "q16_distinct_suppliers",
-    """
-    SELECT p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-    FROM part JOIN lineitem ON p_partkey = l_partkey
-    WHERE p_size IN (5, 15, 25) GROUP BY p_type, p_size
-    """,
-)
-def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q16 shape: DISTINCT aggregation after a join
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size").isin(5, 15, 25))
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        p.join(li, p.p_partkey == li.l_partkey)
-        .groupBy("p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-@_q(
-    "q19_disjunctive_predicates",
-    """
-    SELECT CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(20,4))) AS DOUBLE) AS revenue,
-           count(*) AS n
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE (p_brand = 'Brand#2' AND l_quantity BETWEEN 1 AND 11)
-       OR (p_brand = 'Brand#4' AND l_quantity BETWEEN 10 AND 20)
-       OR (p_size BETWEEN 1 AND 10 AND l_quantity > 40)
-    """,
-)
-def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q19 shape: disjunction of conjunctive range predicates
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    cond = (
-        ((F.col("p_brand") == "Brand#2") & F.col("l_quantity").between(1, 11))
-        | ((F.col("p_brand") == "Brand#4") & F.col("l_quantity").between(10, 20))
-        | (F.col("p_size").between(1, 10) & (F.col("l_quantity") > 40))
-    )
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .filter(cond)
-        .agg(
-            _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-@_q(
-    "q17_small_quantity_revenue",
-    """
-    WITH thr AS (
-      SELECT l_partkey AS pk,
-             (CAST(sum(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) / count(*)) * 0.2 AS tq
-      FROM lineitem GROUP BY l_partkey
-    )
-    SELECT floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(20,4))) AS DOUBLE) / 7.0 * 1e2) / 1e2
-             AS avg_yearly,
-           count(*) AS n
-    FROM lineitem JOIN thr ON l_partkey = pk
-    WHERE l_quantity < tq
-    """,
-)
-def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q17 shape: correlated scalar subquery (per-part avg quantity)
-    # decorrelated into an aggregate + join — the form Catalyst plans well.
-    # Threshold computed identically in both engines (decimal-exact sum /
-    # count, then *0.2) so the boundary comparison cannot diverge.
-    li = _t(spark, sf_dir, "lineitem")
-    thr = li.groupBy(F.col("l_partkey").alias("pk")).agg(
-        (
-            (_dsum(F.col("l_quantity")) / F.count("*")) * F.lit(0.2)
-        ).alias("tq")
-    )
-    small = li.join(thr, li.l_partkey == thr.pk).filter(F.col("l_quantity") < F.col("tq"))
-    return small.agg(
-        (F.floor(_dsum(F.col("l_extendedprice")) / F.lit(7.0) * F.lit(1e2)) / F.lit(1e2)).alias(
-            "avg_yearly"
-        ),
-        F.count("*").alias("n"),
-    )
-
-
-@_q(
-    "q21_sole_returning_supplier",
-    """
-    WITH rl AS (
-      SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem WHERE l_returnflag = 'R'
-    )
-    SELECT s_name, count(*) AS numwait
-    FROM rl l1 JOIN supplier ON s_suppkey = l1.l_suppkey
-    WHERE EXISTS (SELECT 1 FROM lineitem l2
-                  WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                      WHERE l3.l_orderkey = l1.l_orderkey
-                        AND l3.l_suppkey <> l1.l_suppkey AND l3.l_returnflag = 'R')
-    GROUP BY s_name
-    """,
-)
-def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q21 shape: EXISTS (semi join on a non-equi condition) +
-    # NOT EXISTS (anti join) stacked on the same fact table
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    rl = (
-        li.filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    all_ls = li.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_suppkey").alias("s2")
-    )
-    r_ls = (
-        li.filter(F.col("l_returnflag") == "R")
-        .select(F.col("l_orderkey").alias("o3"), F.col("l_suppkey").alias("s3"))
-    )
-    cand = rl.join(
-        all_ls,
-        (F.col("l_orderkey") == F.col("o2")) & (F.col("l_suppkey") != F.col("s2")),
-        "left_semi",
-    ).join(
-        r_ls,
-        (F.col("l_orderkey") == F.col("o3")) & (F.col("l_suppkey") != F.col("s3")),
-        "left_anti",
-    )
-    return (
-        cand.join(F.broadcast(s), cand.l_suppkey == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-    )
-
-
-@_q(
-    "q22_above_avg_balance",
-    """
-    WITH t AS (
-      SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(20,4))) AS DOUBLE) / count(*) AS thr
-      FROM customer WHERE c_acctbal > 0
-    )
-    SELECT substr(c_name, 1, 10) AS cgroup, count(*) AS numcust,
-           CAST(sum(CAST(c_acctbal AS DECIMAL(20,4))) AS DOUBLE) AS totacctbal
-    FROM customer, t WHERE c_acctbal > t.thr
-    GROUP BY cgroup
-    """,
-)
-def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q22 shape: scalar aggregate subquery as a filter threshold
-    # (threshold computed order-independently: exact decimal sum / count)
-    c = _t(spark, sf_dir, "customer")
-    thr = c.filter(F.col("c_acctbal") > 0).agg(
-        (_dsum(F.col("c_acctbal")) / F.count("*")).alias("thr")
-    )
-    return (
-        c.crossJoin(F.broadcast(thr))
-        .filter(F.col("c_acctbal") > F.col("thr"))
-        .groupBy(F.substring("c_name", 1, 10).alias("cgroup"))
-        .agg(
-            F.count("*").alias("numcust"),
-            _dsum(F.col("c_acctbal")).alias("totacctbal"),
-        )
-    )
-
-
-@_q(
     "w5_sessionize",
     """
     WITH gaps AS (
@@ -1200,72 +866,6 @@ def _cos_sql(a: str, b: str) -> str:
     na = _DOT_SQL.format(a=a, b=a)
     nb = _DOT_SQL.format(a=b, b=b)
     return f"({dot}) / (sqrt({na}) * sqrt({nb}))"
-
-
-@_q(
-    "q3_shipping_priority",
-    """
-    SELECT l_orderkey,
-           CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(20,4))) AS DOUBLE) AS revenue,
-           strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS order_day, o_orderpriority
-    FROM customer, orders, lineitem
-    WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-      AND l_orderkey = o_orderkey
-      AND o_orderdate < TIMESTAMP '1997-06-01' AND l_shipdate > TIMESTAMP '1997-06-01'
-    GROUP BY l_orderkey, order_day, o_orderpriority
-    """,
-)
-def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q3 shape: two joins (one broadcastable dim), filtered fact scan.
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1997-06-01").cast("timestamp"))
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1997-06-01").cast("timestamp"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy(
-            "l_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_day"),
-            "o_orderpriority",
-        )
-        .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .select("l_orderkey", "revenue", "order_day", "o_orderpriority")
-    )
-
-
-@_q(
-    "q5_local_supplier_volume",
-    """
-    SELECT n_name, CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(20,4))) AS DOUBLE) AS revenue
-    FROM customer, orders, lineitem, supplier, nation, region
-    WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey AND l_suppkey = s_suppkey
-      AND c_nationkey = s_nationkey AND s_nationkey = n_nationkey
-      AND n_regionkey = r_regionkey AND r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-    GROUP BY n_name
-    """,
-)
-def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # TPC-H Q5 shape: 6-way join — the dims (region/nation/supplier/customer)
-    # broadcast, facts shuffle once on orderkey.
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation").join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-    s = _t(spark, sf_dir, "supplier").join(
-        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
-    )
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(c), (o.o_custkey == c.c_custkey) & (c.c_nationkey == s.s_nationkey))
-        .groupBy("n_name")
-        .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-    )
 
 
 @_q(
@@ -3414,264 +3014,6 @@ def q_dedup_cdc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cdc_incremental(
         docs.filter(F.col("doc_id") % 2 == 1),
         docs.filter(F.col("doc_id") % 2 == 0),
-    )
-
-
-@_q(
-    "dedup_suffix_array",
-    # suffix array of the concatenated (doc_id % 31) sub-corpus: rank by
-    # plain binary string order of every suffix — the oracle sorts the
-    # materialized suffixes; Spark derives the same ranks by distributed
-    # prefix doubling without ever materializing a suffix
-    """
-    WITH d AS (
-      SELECT doc_id, text FROM documents WHERE doc_id % 31 = 0
-    ), corpus AS (
-      SELECT string_agg(text || chr(1), '' ORDER BY doc_id) AS c FROM d
-    ), p AS (
-      SELECT c, unnest(range(1, length(c) + 1)) AS pos FROM corpus
-    )
-    SELECT CAST(row_number() OVER (ORDER BY substr(c, CAST(pos AS INT))) - 1 AS BIGINT) AS rk,
-           CAST(pos AS BIGINT) AS pos
-    FROM p ORDER BY rk
-    """,
-)
-def q_dedup_suffix_array(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed suffix array (prefix doubling, Lee et al. 2022's
-    exact-substring-dedup foundation) over a deterministic sub-corpus:
-    (rk, pos) with rk the lexicographic rank of the suffix at corpus
-    position pos. Every round is a range-partitioned sort + vectorized
-    two-phase fold — no global window, no driver-side corpus
-    (operators/suffix.py::suffix_array)."""
-    from intelligent_ocr_spark.operators.suffix import suffix_array
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 31 == 0)
-    return suffix_array(d)
-
-
-@_q(
-    "dedup_lcp_repeats",
-    # LCP between rank-adjacent suffixes: the oracle compares characters
-    # directly (min mismatch index over a generated series); Spark binary-
-    # lifts over the doubling levels without touching a character
-    """
-    WITH d AS (
-      SELECT doc_id, text FROM documents WHERE doc_id % 31 = 0
-    ), corpus AS (
-      SELECT string_agg(text || chr(1), '' ORDER BY doc_id) AS c FROM d
-    ), p AS (
-      SELECT c, unnest(range(1, length(c) + 1)) AS pos FROM corpus
-    ), sa AS (
-      SELECT c, pos,
-             row_number() OVER (ORDER BY substr(c, CAST(pos AS INT))) - 1 AS rk
-      FROM p
-    ), adj AS (
-      SELECT c, rk, pos AS pos_a,
-             lead(pos) OVER (ORDER BY rk) AS pos_b
-      FROM sa
-    )
-    SELECT CAST(rk AS BIGINT) AS rk,
-           CAST(pos_a AS BIGINT) AS pos_a,
-           CAST(pos_b AS BIGINT) AS pos_b,
-           CAST(coalesce(
-             (SELECT min(t.i) - 1
-              FROM unnest(range(1, least(length(c) - pos_a, length(c) - pos_b) + 2)) AS t(i)
-              WHERE substr(c, CAST(pos_a + t.i - 1 AS INT), 1)
-                    <> substr(c, CAST(pos_b + t.i - 1 AS INT), 1)),
-             least(length(c) - pos_a, length(c) - pos_b) + 1
-           ) AS BIGINT) AS lcp
-    FROM adj WHERE pos_b IS NOT NULL ORDER BY rk
-    """,
-)
-def q_dedup_lcp_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adjacent-suffix LCP table over the suffix array — max(lcp) is the
-    corpus's longest repeated substring and lcp >= L rows enumerate all
-    length-L repeats (the Lee et al. 2022 dedup scan). Binary lifting
-    over the doubling levels: O(log n) rounds of two equi-joins, no
-    character comparisons, no global window
-    (operators/suffix.py::adjacent_lcp)."""
-    from intelligent_ocr_spark.operators.suffix import (
-        adjacent_lcp,
-        suffix_array_levels,
-    )
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 31 == 0)
-    sa, levels = suffix_array_levels(d)
-    return adjacent_lcp(sa, levels)
-
-
-@_q(
-    "dedup_sa_spans",
-    # self-similar spans: both endpoints of every lcp>=15 adjacent pair
-    # become intervals, mapped into docs (clip at doc end), islands-merged
-    """
-    WITH d AS (
-      SELECT doc_id, text FROM documents WHERE doc_id % 31 = 0
-    ), corpus AS (
-      SELECT string_agg(text || chr(1), '' ORDER BY doc_id) AS c FROM d
-    ), p AS (
-      SELECT c, unnest(range(1, length(c) + 1)) AS pos FROM corpus
-    ), sa AS (
-      SELECT c, pos,
-             row_number() OVER (ORDER BY substr(c, CAST(pos AS INT))) - 1 AS rk
-      FROM p
-    ), adj AS (
-      SELECT c, rk, pos AS pos_a, lead(pos) OVER (ORDER BY rk) AS pos_b
-      FROM sa
-    ), lcps AS (
-      SELECT pos_a, pos_b,
-             coalesce(
-               (SELECT min(t.i) - 1
-                FROM unnest(range(1, least(length(c) - pos_a, length(c) - pos_b) + 2)) AS t(i)
-                WHERE substr(c, CAST(pos_a + t.i - 1 AS INT), 1)
-                      <> substr(c, CAST(pos_b + t.i - 1 AS INT), 1)),
-               least(length(c) - pos_a, length(c) - pos_b) + 1
-             ) AS lcp
-      FROM adj WHERE pos_b IS NOT NULL
-    ), iv AS (
-      SELECT pos_a AS s, lcp FROM lcps WHERE lcp >= 15
-      UNION ALL
-      SELECT pos_b AS s, lcp FROM lcps WHERE lcp >= 15
-    ), doclens AS (
-      SELECT doc_id, length(text) AS n_chars,
-             coalesce(sum(length(text) + 1) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM d
-    ), mapped AS (
-      SELECT dl.doc_id, CAST(i.s - dl.off AS BIGINT) AS st,
-             CAST(least(i.s - dl.off + i.lcp - 1, dl.n_chars) AS BIGINT) AS e
-      FROM iv i JOIN doclens dl ON i.s > dl.off AND i.s <= dl.off + dl.n_chars
-    ), isl AS (
-      SELECT doc_id, st, e,
-             CASE WHEN st > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY st
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-             THEN 1 ELSE 0 END AS brk
-      FROM mapped
-    ), grp AS (
-      SELECT doc_id, st, e,
-             sum(brk) OVER (PARTITION BY doc_id ORDER BY st
-               ROWS UNBOUNDED PRECEDING) AS g
-      FROM isl
-    )
-    SELECT doc_id, min(st) AS span_start, max(e) AS span_end,
-           CAST(max(e) - min(st) + 1 AS BIGINT) AS span_len
-    FROM grp GROUP BY doc_id, g ORDER BY doc_id, span_start
-    """,
-)
-def q_dedup_sa_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-similar duplicated-text spans per document (Lee et al. 2022's
-    removal targets): union of both-endpoint lcp>=15 intervals, mapped
-    back to documents through the position table (equi-join, no range
-    join), clipped at doc boundaries, islands-merged per doc
-    (operators/suffix.py::duplicate_spans)."""
-    from intelligent_ocr_spark.operators.suffix import duplicate_spans
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 31 == 0)
-    return duplicate_spans(d, min_len=15)
-
-
-@_q(
-    "pipeline_sa_dedup",
-    # Lee et al. end-to-end: cut every self-similar span out of every
-    # doc; verify the cleaned text by md5 (docs whose every char is
-    # duplicated clean to the empty string, NOT the original)
-    """
-    WITH d AS (
-      SELECT doc_id, text FROM documents WHERE doc_id % 31 = 0
-    ), corpus AS (
-      SELECT string_agg(text || chr(1), '' ORDER BY doc_id) AS c FROM d
-    ), p AS (
-      SELECT c, unnest(range(1, length(c) + 1)) AS pos FROM corpus
-    ), sa AS (
-      SELECT c, pos,
-             row_number() OVER (ORDER BY substr(c, CAST(pos AS INT))) - 1 AS rk
-      FROM p
-    ), adj AS (
-      SELECT c, rk, pos AS pos_a, lead(pos) OVER (ORDER BY rk) AS pos_b
-      FROM sa
-    ), lcps AS (
-      SELECT pos_a, pos_b,
-             coalesce(
-               (SELECT min(t.i) - 1
-                FROM unnest(range(1, least(length(c) - pos_a, length(c) - pos_b) + 2)) AS t(i)
-                WHERE substr(c, CAST(pos_a + t.i - 1 AS INT), 1)
-                      <> substr(c, CAST(pos_b + t.i - 1 AS INT), 1)),
-               least(length(c) - pos_a, length(c) - pos_b) + 1
-             ) AS lcp
-      FROM adj WHERE pos_b IS NOT NULL
-    ), iv AS (
-      SELECT pos_a AS s, lcp FROM lcps WHERE lcp >= 15
-      UNION ALL
-      SELECT pos_b AS s, lcp FROM lcps WHERE lcp >= 15
-    ), doclens AS (
-      SELECT doc_id, length(text) AS n_chars,
-             coalesce(sum(length(text) + 1) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM d
-    ), mapped AS (
-      SELECT dl.doc_id, CAST(i.s - dl.off AS BIGINT) AS st,
-             CAST(least(i.s - dl.off + i.lcp - 1, dl.n_chars) AS BIGINT) AS e
-      FROM iv i JOIN doclens dl ON i.s > dl.off AND i.s <= dl.off + dl.n_chars
-    ), isl AS (
-      SELECT doc_id, st, e,
-             CASE WHEN st > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY st
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-             THEN 1 ELSE 0 END AS brk
-      FROM mapped
-    ), grp AS (
-      SELECT doc_id, st, e,
-             sum(brk) OVER (PARTITION BY doc_id ORDER BY st
-               ROWS UNBOUNDED PRECEDING) AS g
-      FROM isl
-    ), sp AS (
-      SELECT doc_id, min(st) AS span_start, max(e) AS span_end
-      FROM grp GROUP BY doc_id, g
-    ), stats AS (
-      SELECT doc_id, count(*)::BIGINT AS n_spans,
-             sum(span_end - span_start + 1)::BIGINT AS removed
-      FROM sp GROUP BY doc_id
-    ), segs AS (
-      SELECT doc_id,
-             coalesce(lag(span_end) OVER (PARTITION BY doc_id ORDER BY span_start), 0) + 1 AS st,
-             span_start - 1 AS en
-      FROM sp
-      UNION ALL
-      SELECT doc_id, max(span_end) + 1 AS st, NULL AS en
-      FROM sp GROUP BY doc_id
-    ), clean AS (
-      SELECT s.doc_id,
-             string_agg(
-               substr(d2.text, CAST(s.st AS INT),
-                      CAST(coalesce(s.en, length(d2.text)) - s.st + 1 AS INT)),
-               '' ORDER BY s.st) AS clean_text
-      FROM segs s JOIN d d2 USING (doc_id)
-      WHERE coalesce(s.en, length(d2.text)) >= s.st
-      GROUP BY s.doc_id
-    )
-    SELECT d.doc_id,
-           length(d.text)::BIGINT AS orig_chars,
-           coalesce(stats.removed, 0)::BIGINT AS removed_chars,
-           coalesce(stats.n_spans, 0)::BIGINT AS n_spans,
-           md5(CASE WHEN stats.n_spans IS NULL THEN d.text
-                    ELSE coalesce(clean.clean_text, '') END) AS clean_md5
-    FROM d LEFT JOIN stats USING (doc_id) LEFT JOIN clean USING (doc_id)
-    ORDER BY doc_id
-    """,
-)
-def q_pipeline_sa_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed Lee et al. 2022 pipeline: suffix array → adjacent LCP →
-    self-similar spans → cut every occurrence, emitting cleaned-text
-    hashes and removal stats per doc
-    (operators/suffix.py::remove_duplicate_spans)."""
-    from intelligent_ocr_spark.operators.suffix import remove_duplicate_spans
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 31 == 0)
-    return remove_duplicate_spans(d, min_len=15).select(
-        "doc_id",
-        "orig_chars",
-        "removed_chars",
-        "n_spans",
-        F.md5(F.col("clean_text").cast("binary")).alias("clean_md5"),
     )
 
 

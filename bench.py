@@ -38,7 +38,6 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 BENCH_DATA = os.path.join(REPO, ".bench_data")
 
 HEADLINE_QUERIES = [
-    "q1_pricing_summary",
     "w1_order_repair",
     "k3_txt_export",
     "stream_windowed_counts",

@@ -1009,7 +1009,7 @@ def lsh_verified_pairs(
     recomputing.
     """
     # eager localCheckpoint on the two multiply-consumed subtrees (the
-    # discipline near_dup_clusters and suffix_array_levels already use):
+    # discipline near_dup_clusters already uses):
     # `cand` feeds cand_docs twice plus the intersection join, and `sh`
     # feeds sizes/sa/sb — without the checkpoint the corpus-wide
     # MinHash+shingle computation re-evaluates per consumer (round-5

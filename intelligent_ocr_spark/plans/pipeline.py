@@ -16,8 +16,7 @@ SURVEY.md §3.4:
       -> integrity gate (R5) over the checkpoint table
 
 Exactly one JVM↔Python boundary (Arrow) and one shuffle (the url-hash
-repartition — and even that is skipped when the caller's layout is already
-keyed by url). Lineage is the ONLY thing that crosses back to the driver:
+repartition). Lineage is the ONLY thing that crosses back to the driver:
 one row per partition.
 
 Scale notes: the commit stage STREAMS — each incoming Arrow batch goes

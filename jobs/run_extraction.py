@@ -14,14 +14,20 @@ import sys
 
 
 def main() -> int:
+    from intelligent_ocr_spark.operators.extract import (
+        DEFAULT_EXISTING_TEXT_MIN_CHARS,
+        DEFAULT_MIN_CONFIDENCE,
+    )
+
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="pages parquet path / table")
     ap.add_argument("--output", required=True, help="output table directory")
     ap.add_argument("--snapshot-id", type=int, default=0,
                     help="input snapshot id recorded in checkpoint/lineage")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--min-confidence", type=float, default=0.5)
-    ap.add_argument("--existing-text-min-chars", type=int, default=50)
+    ap.add_argument("--min-confidence", type=float, default=DEFAULT_MIN_CONFIDENCE)
+    ap.add_argument("--existing-text-min-chars", type=int,
+                    default=DEFAULT_EXISTING_TEXT_MIN_CHARS)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession

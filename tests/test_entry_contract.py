@@ -12,10 +12,20 @@ The driver verifies only the first ``DRIVER_QUERY_CAP`` entries of
 4. the query lists the bench and plan-dump tools run by default name only
    registered queries.
 
-No Spark session needed — pure registry introspection.
+It also pins the job path's import closure: what a Python worker loads to
+run the extraction kernel, so an off-path import cannot creep back in.
+
+No Spark session needed — registry introspection and one subprocess.
 """
 
 from __future__ import annotations
+
+import ast
+import inspect
+import json
+import os
+import subprocess
+import sys
 
 import __spark_entry__ as entry
 
@@ -73,3 +83,72 @@ def test_rotation_varies_by_round(monkeypatch):
     b = list(entry.queries())
     assert set(a) == set(b)
     assert a != b, "stable remainder must rotate between rounds"
+
+
+# package modules (and package __init__s) the extraction job may load
+JOB_PATH_MODULES = {
+    "",
+    "functions",
+    "functions.charset",
+    "functions.fasthtml",
+    "functions.image_kernels",
+    "functions.layout",
+    "functions.normalize",
+    "functions.pixmap",
+    "functions.variants_data",
+    "functions.variants_icu",
+    "operators",
+    "operators.extract",
+    "plans",
+    "plans.checkpoint",
+    "plans.pipeline",
+    "session",
+    "sources",
+    "sources.pages",
+}
+
+
+def _warm_session_imports() -> list[str]:
+    """Package modules ``_warm_session`` imports into each Python worker."""
+    from intelligent_ocr_spark import session
+
+    tree = ast.parse(inspect.getsource(session._warm_session).lstrip())
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names.add(node.module)
+    return sorted(n for n in names if n.startswith("intelligent_ocr_spark"))
+
+
+def test_job_path_import_closure():
+    """A fresh interpreter that imports the job and the session, runs the
+    worker warm-up's imports and extracts plain, PXPG and quarantined rows
+    loads exactly the job-path modules of the package."""
+    code = "\n".join(
+        ["import json, sys",
+         "import intelligent_ocr_spark.plans.pipeline",
+         "import intelligent_ocr_spark.session"]
+        + [f"import {m}" for m in _warm_session_imports()]
+        + ["from intelligent_ocr_spark.operators.extract import extract_record",
+           "from intelligent_ocr_spark.sources.pages import gen_image_row, gen_row",
+           "kinds = set()",
+           "for i in range(20):",
+           "    for r in (gen_row(i), gen_image_row(i)):",
+           "        e = extract_record(r['url'], r['warc_ts'], r['html'], r['text'], r['lang'])",
+           "        kind = 'pxpg' if r['html'] and r['html'][:4] == b'PXPG' else 'html'",
+           "        kinds.add(e['error'].split(':')[0] if e['error'] else kind)",
+           "mods = sorted(m for m in sys.modules if m.startswith('intelligent_ocr_spark'))",
+           "print(json.dumps({'kinds': sorted(kinds), 'modules': mods}))"]
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, capture_output=True,
+                         text=True, timeout=300, check=True)
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert {"html", "pxpg", "html_null", "pxpg_decode"} <= set(got["kinds"]), got["kinds"]
+    want = {"intelligent_ocr_spark" + (f".{m}" if m else "") for m in JOB_PATH_MODULES}
+    assert set(got["modules"]) == want, {
+        "unexpected": sorted(set(got["modules"]) - want),
+        "missing": sorted(want - set(got["modules"])),
+    }

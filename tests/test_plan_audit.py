@@ -1,9 +1,9 @@
 """Plan-budget regression guard: re-audit a representative subset of the
 registry against the committed BENCH/PLAN_AUDIT.json manifest.
 
-The full-registry audit (tools_planaudit.py, 157 queries incl. iterative
-operators) runs once per round; this test keeps the hot single-pass
-families honest on every CI run — a code change that adds a shuffle, a
+The full-registry audit (tools_planaudit.py, every registered query
+incl. iterative operators) runs once per round; this test keeps the hot
+single-pass families honest on every CI run — a code change that adds a shuffle, a
 Python boundary, or a non-scalar single-partition exchange to any of
 these fails here before the judge ever reads the manifest."""
 
@@ -17,7 +17,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 # single-pass queries spanning the hot families (dedup, freq-hybrid,
 # packing, web, index, text) — cheap to build, no driver loops
 SUBSET = [
-    "q1_pricing_summary",
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_substring_spans",

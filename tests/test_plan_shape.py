@@ -58,16 +58,6 @@ def test_cosine_topk_broadcasts_queries(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_q1_single_shuffle(spark):
-    """TPC-H Q1 shape: exactly one exchange (partial agg → shuffle → final)."""
-    import __spark_entry__ as em
-
-    df = em.queries()["q1_pricing_summary"](spark, "/root/testdata/sf0.001")
-    plan = _plan(df)
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "partial" in plan.lower()  # map-side combine present
-
-
 def test_wholestage_codegen_in_relational_path(spark):
     import __spark_entry__ as em
 

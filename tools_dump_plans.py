@@ -14,7 +14,7 @@ from contextlib import redirect_stdout
 
 DEFAULT_QUERIES = [
     # bench headliners
-    "q1_pricing_summary", "w1_order_repair", "k3_txt_export",
+    "w1_order_repair", "k3_txt_export",
     "stream_windowed_counts", "text_quality_score", "text_fingerprint",
     "dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard",
     "sim_cosine_topk", "sim_ann_lsh", "mm_decode_stats", "url_canonicalize",
@@ -24,7 +24,6 @@ DEFAULT_QUERIES = [
     "index_inverted_full", "sketch_hll_registers",
     # round-6 optimization targets beyond the headline set
     "dedup_lsh_verified", "extract_docs_pages",
-    "dedup_suffix_array", "dedup_lcp_repeats", "dedup_sa_spans",
 ]
 
 
