@@ -60,11 +60,13 @@ from intelligent_ocr_spark.functions.pixmap import (
     analyze_decoded_image,
     decode_page_image,
 )
+from intelligent_ocr_spark.session import drop_zip_importers
 
 __all__ = [
     "EXTRACT_SCHEMA",
     "extract_batch",
     "extract_pages",
+    "extract_partition",
     "extract_record",
     "repartition_by_url",
     "with_host_salt",
@@ -785,6 +787,21 @@ def extract_batch(
     return pa.RecordBatch.from_arrays(passthrough + computed, schema=schema)
 
 
+def extract_partition(
+    batches,
+    min_confidence: float = DEFAULT_MIN_CONFIDENCE,
+    existing_text_min_chars: int = DEFAULT_EXISTING_TEXT_MIN_CHARS,
+    retry_limit: int = DEFAULT_RETRY_LIMIT,
+):
+    """:func:`extract_pages`' partition function: every batch through
+    :func:`extract_batch`, then drop the worker's cached zip importers
+    (:func:`~intelligent_ocr_spark.session.drop_zip_importers`), including
+    those this task's first-time imports created."""
+    for b in batches:
+        yield extract_batch(b, min_confidence, existing_text_min_chars, retry_limit)
+    drop_zip_importers()
+
+
 def extract_pages(
     df: DataFrame,
     min_confidence: float = DEFAULT_MIN_CONFIDENCE,
@@ -798,10 +815,7 @@ def extract_pages(
     """
     pruned = df.select("url", "warc_ts", "html", "text", "lang")
     return pruned.mapInArrow(
-        lambda it: (
-            extract_batch(b, min_confidence, existing_text_min_chars, retry_limit)
-            for b in it
-        ),
+        lambda it: extract_partition(it, min_confidence, existing_text_min_chars, retry_limit),
         EXTRACT_SCHEMA,
     )
 

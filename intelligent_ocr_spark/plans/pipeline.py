@@ -9,6 +9,7 @@ SURVEY.md §3.4:
 .. code-block:: text
 
     read pages, pruned to the 5 input columns   -- S1
+      -> census of input vs checkpoint urls     -- resume only: stop if none left
       .join(checkpoint_done, "url", "left_anti") -- J2 resume
       .repartition(P, xxhash64("url"))           -- url-hash layout (north_rule)
       .mapInArrow(extract_and_commit, lineage)   -- M1..M4, F2..F5, X1..X5, W1/W3 fused
@@ -18,6 +19,17 @@ SURVEY.md §3.4:
 Exactly one JVM↔Python boundary (Arrow) and one shuffle (the url-hash
 repartition). Lineage is the ONLY thing that crosses back to the driver:
 one row per partition.
+
+Resume census: when a checkpoint exists, one url-only Spark action (a full
+outer join of the input's distinct urls with this generation's committed
+urls) counts the distinct input urls, the committed urls and the input
+urls not yet committed. With none left the job builds no anti-join,
+repartition or ``mapInArrow`` and writes nothing; the ``"input"`` gate is
+answered from the same counts, which are exactly what a post-job re-read
+would see. Otherwise the job runs, and the gate re-reads the checkpoint
+but takes the input count from the census instead of rescanning the
+input. A cold run (no checkpoint) has no census and its gate scans the
+input as before.
 
 Scale notes: the commit stage STREAMS — each incoming Arrow batch goes
 through the same extraction kernel as ``extract_pages``
@@ -67,6 +79,7 @@ from intelligent_ocr_spark.plans.checkpoint import (
     read_committed,
     read_table_dir,
 )
+from intelligent_ocr_spark.session import drop_zip_importers
 
 __all__ = ["run_extraction_job", "finalize_with_fallback", "IntegrityError", "LINEAGE_SCHEMA"]
 
@@ -212,6 +225,8 @@ def _make_commit_fn(
             if os.path.exists(tmp_data):
                 os.remove(tmp_data)  # never-renamed temp: invisible to readers anyway
             raise
+        # the worker's next task re-reads every cached zip importer's archive
+        drop_zip_importers()
         if writer is None:
             return
         writer.close()
@@ -308,23 +323,28 @@ def run_extraction_job(
     # extract_batch reads its input columns by position
     pages = input_df.select("url", "warc_ts", "html", "text", "lang")
     done = completed_urls(spark, ckpt_dir, input_snapshot_id, cfg_hash)
-    todo = pages if done is None else pages.join(done, "url", "left_anti")
+    n_input = n_committed = n_left = None
+    if done is not None:
+        n_input, n_committed, n_left = _resume_census(pages, done)
 
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    todo = todo.repartition(p, F.xxhash64("url"))  # url-hash layout (north_rule)
+    lineage_rows = []
+    if n_left != 0:  # a cold run, or a resume with urls left
+        todo = pages if done is None else pages.join(done, "url", "left_anti")
+        p = num_partitions or spark.sparkContext.defaultParallelism
+        todo = todo.repartition(p, F.xxhash64("url"))  # url-hash layout (north_rule)
 
-    commit_fn = _make_commit_fn(
-        out_dir,
-        input_snapshot_id,
-        cfg_hash,
-        min_confidence,
-        existing_text_min_chars,
-        retry_limit,
-        _partition_fail_hook,
-        _crash_between_renames,
-        _flush_probe,
-    )
-    lineage_rows = todo.mapInArrow(commit_fn, LINEAGE_SCHEMA).collect()
+        commit_fn = _make_commit_fn(
+            out_dir,
+            input_snapshot_id,
+            cfg_hash,
+            min_confidence,
+            existing_text_min_chars,
+            retry_limit,
+            _partition_fail_hook,
+            _crash_between_renames,
+            _flush_probe,
+        )
+        lineage_rows = todo.mapInArrow(commit_fn, LINEAGE_SCHEMA).collect()
 
     summary = {
         "out_dir": out_dir,
@@ -340,9 +360,8 @@ def run_extraction_job(
     if integrity_check:
         # R5 gate (reference core/pdf_processor.py:1585-1603). Two modes:
         # * "input" (default, and what `True` means): every input url is
-        #   committed exactly once — exact, but re-scans the input; right
-        #   for a full run, wasteful when resuming a 1% tail of a 100 TB
-        #   table.
+        #   committed exactly once — exact; a cold run re-scans the input
+        #   for its url count, a resume takes it from the census.
         # * "lineage": reconcile the checkpoint against the lineage docs
         #   sums for this generation — O(commit metadata), no input scan;
         #   catches torn/missing partition commits, not absent inputs.
@@ -376,15 +395,30 @@ def run_extraction_job(
                     f"checkpoint rows {n_rows} != lineage docs {n_lineage}"
                 )
         else:
-            committed = completed_urls(spark, ckpt_dir, input_snapshot_id, cfg_hash)
-            n_committed = committed.count() if committed is not None else 0
-            n_input = input_df.select("url").distinct().count()
+            if n_left != 0:  # the job committed: re-read the checkpoint
+                committed = completed_urls(spark, ckpt_dir, input_snapshot_id, cfg_hash)
+                n_committed = committed.count() if committed is not None else 0
+            if n_input is None:  # cold run: no census
+                n_input = input_df.select("url").distinct().count()
             if n_committed != n_input:
                 raise IntegrityError(
                     f"committed urls {n_committed} != input urls {n_input}"
                 )
         summary["integrity_ok"] = True
     return summary
+
+
+def _resume_census(pages: DataFrame, done: DataFrame) -> tuple[int, int, int]:
+    """(distinct input urls, committed urls, input urls not committed) in
+    one url-only Spark action: a full outer join of the input's distinct
+    urls with ``done``. Null urls count like any other value, as in the
+    gate's ``distinct().count()``, and never match, as in the anti-join."""
+    inp = pages.select("url").distinct().withColumn("_in", F.lit(True))
+    dn = done.withColumn("_done", F.lit(True))
+    counts = inp.join(dn, "url", "full_outer").agg(
+        F.count("_in"), F.count("_done"), F.count(F.when(F.col("_done").isNull(), True))
+    )
+    return tuple(counts.collect()[0])
 
 
 def finalize_with_fallback(

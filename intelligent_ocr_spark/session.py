@@ -27,13 +27,27 @@ Scale notes (100 TB / 1000-executor design, tested on local[N]):
   same Arrow boundary ``extract_pages`` and the job's commit use), the
   steady-state discipline the extraction bench child already applies to
   its own timed section. Disable with SPARK_GRAFT_WARM_SESSION=0.
+* Zip importers dropped per task (:func:`drop_zip_importers`): before
+  every task PySpark's worker (``worker_util.setup_spark_files``) calls
+  ``importlib.invalidate_caches()``. On CPython 3.10-3.12 that makes every
+  ``zipimporter`` in ``sys.path_importer_cache`` re-read its archive's
+  whole central directory in pure Python (3.13 made it lazy). A warm
+  Spark 4.1 worker holds 16 of them: one per package directory of
+  ``pyspark.zip`` (1,328 entries, re-read for each) and of the py4j zip,
+  plus the spark-core jar (5,359 entries, no Python) that Spark puts on
+  every worker's path. Measured inside a worker on a 4-core Xeon host:
+  130-240 ms per task. Every Python partition function on the job path
+  drops those entries when its batches are done, so the next task's
+  invalidation finds none.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import sys
 import tempfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -50,6 +64,25 @@ if _REPO_ROOT not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
     os.environ["PYTHONPATH"] = (
         _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
     ).rstrip(os.pathsep)
+
+
+def drop_zip_importers() -> None:
+    """Delete the ``zipimporter`` values from ``sys.path_importer_cache``.
+
+    Modules already imported keep their loaders; a later import re-creates
+    only the entry it needs, from ``zipimport._zip_directory_cache``, which
+    stays filled, so nothing re-reads an archive. Called at the end of each
+    Python partition function on the job path: a task's first-time imports
+    (and the unpickling of its function) can re-create entries, so a
+    one-time call per worker would not hold. The price: an archive changed
+    in place while the worker lives is not re-read (Spark does not
+    overwrite a file already added to an application).
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
 
 #: application ids already warmed (getOrCreate can hand the same session
 #: to many build_session calls — warm once per JVM/application)
@@ -84,10 +117,12 @@ def _warm_session(spark: SparkSession, cores: int) -> None:
         shutil.rmtree(d, ignore_errors=True)
 
     # Python workers: one task per core importing the extraction kernel
-    # (worker reuse keeps the warmed daemons for every later task)
+    # (worker reuse keeps the warmed daemons for every later task); the
+    # zip importers those imports cache are dropped after them
     def _imp(batches):
         import intelligent_ocr_spark.operators.extract  # noqa: F401
 
+        drop_zip_importers()
         yield from batches
 
     (

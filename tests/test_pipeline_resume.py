@@ -283,3 +283,74 @@ def test_warc_ts_instant_survives_session_time_zone(spark, tmp_path):
     joined = committed.join(source, "url")
     assert joined.count() == 40
     assert joined.filter(F.col("out_us") != F.col("in_us")).count() == 0
+
+
+def test_noop_resume_skips_the_commit_stage(spark, tmp_path):
+    """A resume with nothing left runs no commit task: a kill hook on every
+    partition never fires, nothing is written, and the gate still holds."""
+    out = str(tmp_path / "out")
+    inp = pages_df(spark, N, partitions=4)
+    run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=8)
+    files_before = sorted(os.listdir(os.path.join(out, d)) for d in ("data", "checkpoint", "lineage"))
+    s = run_extraction_job(
+        spark, inp, out, SNAPSHOT, num_partitions=8,
+        _partition_fail_hook=make_partition_kill_hook(set(range(8))),
+    )
+    assert s["docs_processed"] == 0
+    assert s["partitions_committed"] == 0
+    assert s["integrity_ok"]
+    assert sorted(os.listdir(os.path.join(out, d)) for d in ("data", "checkpoint", "lineage")) == files_before
+
+
+def test_integrity_gate_raises_on_missing_urls_after_tail_resume(spark, tmp_path, monkeypatch):
+    """The gate re-reads the checkpoint after a resumed tail commits: a torn
+    readback there must still abort."""
+    import intelligent_ocr_spark.plans.pipeline as P
+
+    out = str(tmp_path / "out")
+    inp = pages_df(spark, N, partitions=4)
+    base = inp.filter(F.pmod(F.xxhash64("url"), F.lit(10)) != 0)
+    s = run_extraction_job(spark, base, out, SNAPSHOT, num_partitions=4)
+    assert 0 < s["docs_processed"] < N
+    real = P.completed_urls
+    calls = {"n": 0}
+
+    def torn(*args, **kwargs):
+        calls["n"] += 1
+        res = real(*args, **kwargs)
+        # first call = resume lookup (the 90% done-set); later = gate readback
+        if calls["n"] >= 2 and res is not None:
+            return res.limit(10)
+        return res
+
+    monkeypatch.setattr(P, "completed_urls", torn)
+    with pytest.raises(IntegrityError):
+        P.run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=4)
+    assert calls["n"] == 2
+
+
+def test_noop_resume_over_a_subset_fails_the_gate(spark, tmp_path):
+    """Nothing is left when the input is a subset of what was committed, so
+    the commit stage is skipped; the gate still sees more committed urls
+    than input urls and raises."""
+    out = str(tmp_path / "out")
+    inp = pages_df(spark, N, partitions=4)
+    run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=4)
+    half = inp.orderBy("url").limit(N // 2)
+    with pytest.raises(IntegrityError):
+        run_extraction_job(spark, half, out, SNAPSHOT, num_partitions=4)
+    s = run_extraction_job(spark, half, out, SNAPSHOT, num_partitions=4, integrity_check=False)
+    assert s["docs_processed"] == 0
+
+
+def test_resume_census_counts_null_urls_like_the_gate(spark, tmp_path):
+    """A null url never matches the done-set, so it is redone on every
+    resume, and counts once among the input urls, as at a cold gate."""
+    from intelligent_ocr_spark.plans.pipeline import _resume_census
+
+    pages = spark.createDataFrame(
+        [(u, None, b"<p>x</p>", "", None) for u in ("a", "b", "b", None, None)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    done = spark.createDataFrame([("a",), ("z",), (None,)], "url string")
+    assert _resume_census(pages, done) == (3, 3, 2)
