@@ -15,9 +15,11 @@ loop. Sharing the stdlib's regexes and control flow makes equivalence a
 matter of construction; tests/test_fasthtml_differential.py pins it with
 corpus + fuzz differentials against the stdlib parser itself.
 
-Out-of-grammar constructs — comments/doctype/PIs (``<!``, ``<?``) and the
-CDATA-content elements (``<script>``, ``<style>``) — are detected with one
-cheap C-level scan (``fast_applicable``) and routed to the stdlib parser.
+Comments, doctypes and PIs map to no-op handlers, and the CDATA-content
+elements (``<script>``, ``<style>``) run goahead's CDATA mode: their body is
+emitted raw up to the matching end tag. The one construct left out,
+marked sections (``<![``), is detected by ``fast_applicable`` and routed
+to the stdlib parser.
 """
 
 from __future__ import annotations
@@ -44,13 +46,19 @@ except ImportError:  # pragma: no cover - future-python guard
 
 __all__ = ["fast_applicable", "fast_feed"]
 
-# constructs the port does not model: marked sections ('<![CDATA[', '<![if')
-# and the raw-text elements html.parser treats as CDATA content
-# (CPython's CDATA_CONTENT_ELEMENTS is exactly ("script", "style")).
-# Comments, doctypes, and PIs ARE modeled (they map to no-op handlers), so
-# real-world pages — which virtually all start with <!DOCTYPE and contain
-# comments — stay on the fast path.
-_BAIL_RE = re.compile(r"<!\[|<script|<style", re.IGNORECASE)
+# the one construct the port does not model: marked sections
+# ('<![CDATA[', '<![if'). Comments, doctypes, PIs and the CDATA-content
+# elements <script>/<style> ARE modeled, so real-world pages — which
+# virtually all carry a doctype, comments and script/style — stay on the
+# fast path.
+_BAIL_RE = re.compile(r"<!\[")
+
+# goahead's CDATA-content mode: after a <script>/<style> start tag,
+# set_cdata_mode makes ``interesting`` this end-tag search (CPython's
+# CDATA_CONTENT_ELEMENTS is exactly ("script", "style"))
+_CDATA_END = {
+    tag: re.compile(r"</\s*%s\s*>" % tag, re.I) for tag in ("script", "style")
+}
 
 _ALPHA_EQ_SLASH = "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _ASCII_LETTERS = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -114,7 +122,9 @@ def _check_whole_start_tag(raw: str, i: int) -> int:
 
 
 def _parse_starttag(handler, raw: str, i: int) -> int:
-    """Port of ``parse_starttag`` (CDATA elements excluded by the bail)."""
+    """Port of ``parse_starttag``; every start tag it emits goes through
+    :func:`_emit_starttag`, except the ``/>`` form (``<script/>`` opens no
+    CDATA content)."""
     # fast path: attribute-less tag ('<p>', '<li>', …) — the dominant
     # shape. tagfind_tolerant consumes the name plus trailing space/slash
     # runs, so name-then-'>' means: no attrs, endpos = k+1, end == '>';
@@ -122,8 +132,7 @@ def _parse_starttag(handler, raw: str, i: int) -> int:
     m = tagfind_tolerant.match(raw, i + 1)
     k0 = m.end()
     if raw[k0 : k0 + 1] == ">":
-        handler.handle_starttag(m.group(1).lower(), [])
-        return k0 + 1
+        return _emit_starttag(handler, raw, k0 + 1, m.group(1).lower(), [])
     # fast path 2: a run of strict name="value" attributes then '>' —
     # exactly what attrfind_tolerant would yield for this shape (names
     # already lowercase, quotes stripped, no '&' so no unescape)
@@ -136,8 +145,7 @@ def _parse_starttag(handler, raw: str, i: int) -> int:
         fast_attrs.append((am.group(1), am.group(2)))
         j = am.end()
     if fast_attrs and raw[j : j + 1] == ">":
-        handler.handle_starttag(m.group(1).lower(), fast_attrs)
-        return j + 1
+        return _emit_starttag(handler, raw, j + 1, m.group(1).lower(), fast_attrs)
     endpos = _check_whole_start_tag(raw, i)
     if endpos < 0:
         return endpos
@@ -169,14 +177,51 @@ def _parse_starttag(handler, raw: str, i: int) -> int:
         # default handle_startendtag == starttag + endtag
         handler.handle_starttag(tag, attrs)
         handler.handle_endtag(tag)
-    else:
-        handler.handle_starttag(tag, attrs)
+        return endpos
+    return _emit_starttag(handler, raw, endpos, tag, attrs)
+
+
+def _emit_starttag(handler, raw: str, endpos: int, tag: str, attrs) -> int:
+    """``handle_starttag`` plus ``set_cdata_mode``: returns where goahead
+    resumes, which is past the CDATA content for ``<script>``/``<style>``."""
+    handler.handle_starttag(tag, attrs)
+    if tag in _CDATA_END:
+        return _parse_cdata_content(handler, raw, endpos, tag)
     return endpos
 
 
+def _parse_cdata_content(handler, raw: str, i: int, tag: str) -> int:
+    """Port of goahead in CDATA-content mode, from ``set_cdata_mode(tag)``
+    to ``clear_cdata_mode``: the element body is emitted raw (no unescape)
+    up to the first ``</tag>`` that ``parse_endtag`` accepts. Returns where
+    normal parsing resumes. With no end tag it returns ``len(raw)``:
+    goahead breaks and close() flushes nothing in CDATA mode, so the rest
+    of the document is dropped."""
+    interesting = _CDATA_END[tag]
+    while True:
+        m = interesting.search(raw, i)
+        if m is None:
+            return len(raw)
+        j = m.start()
+        if i < j:
+            handler.handle_data(raw[i:j])
+        # parse_endtag with cdata_elem set; the match's only '>' is its
+        # last char, so endendtag's gtpos is m.end(). endtagfind rejects a
+        # match that re.I found through a non-ASCII case fold ('ſ', 'ı'),
+        # and then the end tag is content too.
+        gtpos = m.end()
+        em = endtagfind.match(raw, j)
+        if em is not None and em.group(1).lower() == tag:
+            handler.handle_endtag(tag)
+            return gtpos
+        handler.handle_data(raw[j:gtpos])
+        i = gtpos
+
+
 def _parse_endtag(handler, raw: str, i: int) -> int:
-    """Port of ``parse_endtag`` (cdata_elem is never set on the fast path;
-    handle_comment is a no-op on our handler, so bogus comments just skip)."""
+    """Port of ``parse_endtag`` outside CDATA mode (inside it,
+    :func:`_parse_cdata_content` handles end tags; handle_comment is a no-op
+    on our handler, so bogus comments just skip)."""
     gt = raw.find(">", i + 1)
     if gt < 0:
         return -1
@@ -241,7 +286,8 @@ def fast_feed(handler, raw: str) -> None:
 
     Hot loop = one ``_TOK.match`` per token (data run / strict start tag /
     plain end tag — ~99% of tokens on real pages); anything else falls to
-    the original per-construct ports, unchanged. Equivalence is pinned by
+    the original per-construct ports, unchanged. A ``<script>``/``<style>``
+    body is skipped with one end-tag search. Equivalence is pinned by
     tests/test_fasthtml_differential.py (corpus + hypothesis fuzz)."""
     handle_data = handler.handle_data
     handle_starttag = handler.handle_starttag
@@ -259,11 +305,14 @@ def fast_feed(handler, raw: str) -> None:
             elif li == 4:
                 handle_endtag(m[4].lower())
             else:
+                tag = m[2].lower()
                 attrs = m[3]
                 handle_starttag(
-                    m[2].lower(),
-                    _SIMPLE_ATTR_FIND.findall(attrs) if attrs else [],
+                    tag, _SIMPLE_ATTR_FIND.findall(attrs) if attrs else []
                 )
+                if tag in _CDATA_END:  # never '<script/>': _TOK excludes '/>'
+                    i = _parse_cdata_content(handler, raw, m.end(), tag)
+                    continue
             i = m.end()
             continue
         nxt = raw[i + 1 : i + 2]
@@ -297,16 +346,30 @@ def fast_feed(handler, raw: str) -> None:
 
 def _selftest() -> bool:
     """Import-time sentinel: the port must reproduce the running stdlib's
-    event stream on a construct-dense document; otherwise (e.g. a future
+    event stream on construct-dense documents; otherwise (e.g. a future
     CPython changed tokenization) the fast path disables itself and every
-    input takes the stdlib route."""
+    input takes the stdlib route.
+
+    The second document pins the CDATA-content mode. Later CPython patch
+    releases changed it: ``</script foo>`` closes the element, an
+    unterminated element's body is flushed as data, ``--!>`` closes a
+    comment, and title/textarea/xmp/iframe/noembed/noframes/plaintext get
+    raw-text or RCDATA content. Each of those differs from the port here,
+    so such an interpreter turns the fast path off."""
     if not _IMPORTS_OK:
         return False
     from html.parser import HTMLParser
 
-    sentinel = (
+    sentinels = (
         '<!DOCTYPE html><!-- c --><?pi?><p a="1" b=/x/ disabled/>t &amp; x'
-        "</><</1><a <>text</p junk><br/><i>&#20013;</i> <"
+        "</><</1><a <>text</p junk><br/><i>&#20013;</i> <",
+        '<SCRIPT type="x">if (a < b && c) { s = "</p>" + "</scr" + "ipt>"; }'
+        "</script foo>&amp;</Script >t<style>p{}</ style ><script/>&lt;"
+        "<style>a</styles></ſtyle></style><!--x--!>y-->"
+        "<title>&amp;<b>t</b></title><textarea><i>x</i></textarea>"
+        "<xmp><a>z</a></xmp><iframe><p>w</p></iframe><noembed><p>e</p>"
+        "</noembed><noframes><p>f</p></noframes><plaintext><p>g</p>"
+        "<script>a < b; unterminated</p>",
     )
 
     class _Rec(HTMLParser):
@@ -328,13 +391,16 @@ def _selftest() -> bool:
                 self.ev.append(("d", d))
 
     try:
-        ref = _Rec()
-        ref.feed(sentinel)
-        ref.close()
-        got = _Rec()
-        fast_feed(got, sentinel)
-        got.close()
-        return ref.ev == got.ev
+        for sentinel in sentinels:
+            ref = _Rec()
+            ref.feed(sentinel)
+            ref.close()
+            got = _Rec()
+            fast_feed(got, sentinel)
+            got.close()
+            if ref.ev != got.ev:
+                return False
+        return True
     except Exception:  # pragma: no cover - future-python guard
         return False
 

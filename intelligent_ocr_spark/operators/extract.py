@@ -48,6 +48,7 @@ from pyspark.sql import types as T
 
 from intelligent_ocr_spark.functions.charset import decode_html_bytes
 from intelligent_ocr_spark.functions.fasthtml import (
+    _CDATA_END,
     _SIMPLE_ATTR_FIND as _FAST_ATTRS,
     _TOK as _FAST_TOK,
     fast_applicable,
@@ -384,7 +385,8 @@ def _scan_page(raw: str):
     no handler-call protocol, no per-tag attribute dict.
 
     ALL-OR-NOTHING: any token outside the strict grammar (malformed tag,
-    bogus comment, self-closing slash, '&' in an attribute value) returns
+    bogus comment, self-closing slash, '&' in an attribute value, a
+    ``<script>``/``<style>`` start tag and so CDATA content) returns
     ``None`` and the caller re-parses the page through the general
     handler path from scratch, so equivalence holds by construction for
     accepted pages and by fallback for everything else (pinned output-
@@ -492,6 +494,11 @@ def _scan_page(raw: str):
                     zoom = 1.0
             if tag not in _VOID_TAGS:
                 is_boiler = tag in _BOILER_TAGS
+                if is_boiler and tag in _CDATA_END:
+                    # <script>/<style> body is CDATA content, which this
+                    # loop would tokenize; checked under is_boiler (both
+                    # are boiler tags) to keep it off the common path
+                    return None
                 if (
                     not is_boiler
                     and cls_seen
@@ -545,9 +552,11 @@ def _scan_page(raw: str):
 def _parse_html(raw: str):
     if fast_applicable(raw):
         # flat geo pages take the findall fast path; other in-grammar
-        # pages the fused single-loop scan; the goahead port drives the
-        # general handler for the rest (equivalence pinned by
-        # tests/test_fasthtml_differential.py)
+        # pages without doctype, comment or script/style the fused
+        # single-loop scan; the goahead port (CDATA mode included) drives
+        # the general handler for the rest. Only marked sections ('<![')
+        # or a failed import-time self-test reach the stdlib below
+        # (equivalence pinned by tests/test_fasthtml_differential.py)
         page = _scan_geo_page(raw)
         if page is not None:
             return page
