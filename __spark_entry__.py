@@ -2178,123 +2178,6 @@ def q_s4_input_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# robots.txt fixture shared verbatim by the Spark query and the oracle
-# (host index mod 4; index 3 hosts have no robots.txt at all)
-_ROBOTS_FIXTURE = {
-    0: ("User-agent: evilbot\nDisallow: /\n\nUser-agent: *\n"
-        "Disallow: /admin/\nAllow: /admin/public/\n# audit note\n"
-        "Disallow: /article/1"),
-    1: "User-agent: *\nDisallow:\nCrawl-delay: 2",
-    2: "User-agent: *\nDisallow: /admin\nAllow: /admin/login/4",
-    3: None,
-}
-_ROBOTS_SQL_VALUES = ", ".join(
-    f"('h{i}.example.org', '{_ROBOTS_FIXTURE[i % 4]}')"
-    for i in range(17)
-    if _ROBOTS_FIXTURE[i % 4] is not None
-)
-_S4_URL_SQL = (
-    "'https://h' || (doc_id % 17) || '.example.org/' || "
-    "CASE WHEN doc_id % 5 = 0 THEN 'admin/login' ELSE 'article' END "
-    "|| '/' || doc_id"
-)
-
-
-@_q(
-    "web_robots_filter",
-    rf"""
-    WITH robots(host, robots_txt) AS (VALUES {_ROBOTS_SQL_VALUES}),
-    rlines AS (
-      SELECT host, u.i AS idx, parts[CAST(u.i AS INT)] AS line
-      FROM (SELECT host, string_split(robots_txt, chr(10)) AS parts FROM robots),
-           unnest(range(1, CAST(len(parts)+1 AS BIGINT))) AS u(i)
-    ), parsed AS (
-      SELECT host, idx,
-             lower(trim(regexp_extract(line, '^\s*([A-Za-z-]+)\s*:', 1))) AS k,
-             trim(regexp_extract(line, '^[^:#]*:\s*([^#]*)', 1)) AS v
-      FROM rlines
-      WHERE lower(trim(regexp_extract(line, '^\s*([A-Za-z-]+)\s*:', 1))) <> ''
-    ), runs AS (
-      SELECT *, CASE WHEN (k = 'user-agent') AND NOT COALESCE(
-                 lag(k = 'user-agent') OVER (PARTITION BY host ORDER BY idx),
-                 false) THEN 1 ELSE 0 END AS new_grp
-      FROM parsed
-    ), grouped AS (
-      SELECT *, sum(new_grp) OVER (PARTITION BY host ORDER BY idx) AS grp
-      FROM runs
-    ), star AS (
-      SELECT DISTINCT host, grp FROM grouped WHERE k = 'user-agent' AND v = '*'
-    ), rules AS (
-      SELECT DISTINCT g.host, (g.k = 'allow') AS is_allow, g.v AS rpath
-      FROM grouped g JOIN star s ON g.host = s.host AND g.grp = s.grp
-      WHERE g.k IN ('allow', 'disallow') AND g.v <> ''
-        AND g.v NOT LIKE '%*%' AND g.v NOT LIKE '%$%'
-    ), urls AS (
-      SELECT {_S4_URL_SQL} AS url FROM documents
-    ), u AS (
-      SELECT url,
-             regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host,
-             COALESCE(NULLIF(regexp_extract(url,
-               '^[a-z][a-z0-9+.-]*://[^/]+(/[^#?]*)', 1), ''), '/') AS path
-      FROM urls
-    ), scored AS (
-      SELECT u.url, u.host,
-             CASE WHEN r.rpath IS NOT NULL AND starts_with(u.path, r.rpath)
-                  THEN 1 ELSE 0 END AS m,
-             CASE WHEN r.rpath IS NOT NULL AND starts_with(u.path, r.rpath)
-                  THEN length(r.rpath) ELSE 0 END AS ln,
-             CASE WHEN r.rpath IS NOT NULL AND starts_with(u.path, r.rpath)
-                  THEN CAST(r.is_allow AS INT) ELSE 0 END AS al
-      FROM u LEFT JOIN rules r ON u.host = r.host
-    ), best AS (
-      SELECT url, host, m, al,
-             row_number() OVER (PARTITION BY url
-               ORDER BY m DESC, ln DESC, al DESC) AS rn
-      FROM scored
-    )
-    SELECT host, CAST(count(*) AS BIGINT) AS n_urls,
-           CAST(count(*) FILTER (WHERE m = 0 OR al = 1) AS BIGINT) AS n_allowed
-    FROM best WHERE rn = 1 GROUP BY host ORDER BY host
-    """,
-)
-def q_web_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 9309 robots.txt compliance audit: parse each host's robots
-    into its *-group rules (relational line-state machine), decide every
-    URL by longest-match-allow-wins, summarize per host. Hosts without
-    robots.txt allow everything; the evilbot-only group must not leak
-    into the * verdicts (operators/web.py)."""
-    from intelligent_ocr_spark.operators.web import robots_allowed
-
-    robots = spark.createDataFrame(
-        [
-            (f"h{i}.example.org", _ROBOTS_FIXTURE[i % 4])
-            for i in range(17)
-            if _ROBOTS_FIXTURE[i % 4] is not None
-        ],
-        "host string, robots_txt string",
-    )
-    url = F.concat(
-        F.lit("https://h"),
-        (F.col("doc_id") % 17).cast("string"),
-        F.lit(".example.org/"),
-        F.when(F.col("doc_id") % 5 == 0, F.lit("admin/login")).otherwise(
-            F.lit("article")
-        ),
-        F.lit("/"),
-        F.col("doc_id"),
-    )
-    pages = _t(spark, sf_dir, "documents").select(url.alias("url"))
-    return (
-        robots_allowed(pages, robots)
-        .groupBy("host")
-        .agg(
-            F.count(F.lit(1)).alias("n_urls"),
-            F.count(F.when(F.col("allowed"), 1)).alias("n_allowed"),
-        )
-        .orderBy("host")
-    )
-
-
 @_q(
     "prep_pii_signals",
     r"""
@@ -3582,198 +3465,6 @@ def q_mm_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "web_pagerank",
-    """
-    WITH RECURSIVE
-    raw AS (
-      SELECT doc_id % 40 AS src, (doc_id * 7 + 3) % 40 AS dst
-      FROM documents WHERE doc_id < 240
-      UNION ALL
-      SELECT doc_id % 40, (doc_id * 11 + 5) % 40
-      FROM documents WHERE doc_id < 240
-    ),
-    e AS (SELECT DISTINCT src, dst FROM raw WHERE src <> dst),
-    -- NB: inside WITH RECURSIVE, DuckDB parses a top-level UNION in a
-    -- non-recursive CTE as the recursive-union form and SKIPS the dedup,
-    -- so spell the dedup explicitly (DISTINCT over UNION ALL).
-    nodes AS (SELECT DISTINCT node FROM (
-      SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e)),
-    deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY 1),
-    pr(it, node, r) AS (
-      SELECT 0, node, CAST(1000000000 AS BIGINT) FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, r FROM pr)
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               CAST(150000000 AS BIGINT) + (85 * COALESCE(c.s, 0)) // 100
-        FROM nodes n
-        LEFT JOIN (
-          SELECT e.dst, SUM(p.r // deg.d) AS s
-          FROM prev p JOIN e ON e.src = p.node JOIN deg ON deg.src = p.node
-          GROUP BY e.dst
-        ) c ON c.dst = n.node
-        WHERE (SELECT max(it) FROM prev) < 5
-      ) z
-    )
-    SELECT node, r AS rank_scaled FROM pr WHERE it = 5 ORDER BY node
-    """,
-)
-def q_web_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact PageRank over a synthesized 40-domain link graph
-    (two deterministic out-links per document, deduped, self-loops
-    dropped), five damped power iterations in scaled int64 "nano-rank"
-    units — reproduced bit-for-bit by a DuckDB recursive CTE that
-    replays the identical integer arithmetic, so the driver hash check
-    pins the operator's exact semantics including integer-division
-    share splitting and dangling-mass leakage. Per-iteration plan is
-    one src equi-join + one dst aggregation + one node left join (see
-    operators/graph.py for the 100-TB shape discussion)."""
-    from intelligent_ocr_spark.operators.graph import pagerank
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-    raw = d.select(
-        (F.col("doc_id") % 40).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 40).alias("dst"),
-    ).union(
-        d.select(
-            (F.col("doc_id") % 40).alias("src"),
-            ((F.col("doc_id") * 11 + 5) % 40).alias("dst"),
-        )
-    )
-    return pagerank(raw, n_iter=5).orderBy("node")
-
-
-# Shared deterministic page-with-anchors synthesis for the link queries:
-# url http://h{doc_id%40}.example/d/{doc_id}; html carries two absolute
-# anchors (the second with a port + query + fragment to exercise host
-# cutting) plus rotating negatives (relative path, single-quoted href,
-# mailto) that extract_links must skip. The DuckDB twin builds the
-# byte-identical strings with || so the regex sees the same input.
-_LINK_PAGES_SQL = """
-      SELECT 'http://h' || (doc_id % 40) || '.example/d/' || doc_id AS url,
-             '<html><p>t</p><a href="http://h' || ((doc_id * 7 + 3) % 40)
-             || '.example/p/' || doc_id
-             || '">x</a><a class="n" href="https://h'
-             || ((doc_id * 11 + 5) % 40) || '.example:81/q?x=1#f">y</a>'
-             || CASE WHEN doc_id % 3 = 0 THEN '<a href="/rel/skip">r</a>'
-                     ELSE '<a href=''http://squote.example/skip''>s</a>' END
-             || CASE WHEN doc_id % 5 = 0
-                     THEN '<a href="mailto:a@b.example">m</a>' ELSE '' END
-             || '</html>' AS html
-      FROM documents WHERE doc_id < 240
-"""
-
-
-def _link_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-    s = lambda c: c.cast("string")  # noqa: E731
-    url = F.concat(
-        F.lit("http://h"), s(F.col("doc_id") % 40),
-        F.lit(".example/d/"), s(F.col("doc_id")),
-    )
-    html = F.concat(
-        F.lit('<html><p>t</p><a href="http://h'),
-        s((F.col("doc_id") * 7 + 3) % 40),
-        F.lit(".example/p/"), s(F.col("doc_id")),
-        F.lit('">x</a><a class="n" href="https://h'),
-        s((F.col("doc_id") * 11 + 5) % 40),
-        F.lit('.example:81/q?x=1#f">y</a>'),
-        F.when(F.col("doc_id") % 3 == 0, F.lit('<a href="/rel/skip">r</a>'))
-        .otherwise(F.lit("<a href='http://squote.example/skip'>s</a>")),
-        F.when(F.col("doc_id") % 5 == 0,
-               F.lit('<a href="mailto:a@b.example">m</a>')).otherwise(F.lit("")),
-        F.lit("</html>"),
-    )
-    return d.select(url.alias("url"), html.alias("html"))
-
-
-@_q(
-    "web_extract_links",
-    f"""
-    WITH p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    )
-    SELECT url AS src_url,
-           regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src_host,
-           href,
-           regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst_host
-    FROM x
-    WHERE regexp_matches(href, '^https?://')
-    ORDER BY src_url, href
-    """,
-)
-def q_web_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor extraction over synthesized pages: absolute double-quoted
-    http(s) hrefs become (src_url, src_host, href, dst_host) edges;
-    relative/single-quoted/mailto anchors and ports/query/fragments in
-    the host parse are all exercised. The operator is a zero-exchange
-    projection + Generate (plan-pinned in tests/test_web.py); DuckDB
-    replays the identical RE2-safe regexes over byte-identical html."""
-    from intelligent_ocr_spark.operators.web import extract_links
-
-    return extract_links(_link_pages(spark, sf_dir)).orderBy("src_url", "href")
-
-
-@_q(
-    "pipeline_link_authority",
-    f"""
-    WITH RECURSIVE
-    p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    e AS (SELECT DISTINCT src, dst FROM l WHERE src <> dst),
-    -- DISTINCT over UNION ALL: see web_pagerank's note on DuckDB's
-    -- recursive-union parse of top-level UNION inside WITH RECURSIVE
-    nodes AS (SELECT DISTINCT node FROM (
-      SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e)),
-    deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY 1),
-    pr(it, node, r) AS (
-      SELECT 0, node, CAST(1000000000 AS BIGINT) FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, r FROM pr)
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               CAST(150000000 AS BIGINT) + (85 * COALESCE(c.s, 0)) // 100
-        FROM nodes n
-        LEFT JOIN (
-          SELECT e.dst, SUM(p.r // deg.d) AS s
-          FROM prev p JOIN e ON e.src = p.node JOIN deg ON deg.src = p.node
-          GROUP BY e.dst
-        ) c ON c.dst = n.node
-        WHERE (SELECT max(it) FROM prev) < 5
-      ) z
-    )
-    SELECT node, r AS rank_scaled FROM pr WHERE it = 5 ORDER BY node
-    """,
-)
-def q_pipeline_link_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end link-authority pipeline: synthesized pages → anchor
-    extraction → distinct cross-host edges → five integer-exact
-    PageRank iterations. Composes extract_links + host_edges +
-    graph.pagerank; the oracle replays the whole chain (regex edge
-    derivation feeding the recursive-CTE power iteration) so the
-    driver hash pins the composition, not just the stages."""
-    from intelligent_ocr_spark.operators.graph import pagerank
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    edges = host_edges(extract_links(_link_pages(spark, sf_dir)))
-    return pagerank(edges, n_iter=5).orderBy("node")
-
-
-@_q(
     "sketch_hll_registers",
     """
     WITH h AS (
@@ -3848,444 +3539,6 @@ def q_index_inverted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
     return inverted_index(d, max_postings=16).orderBy("term")
-
-
-@_q(
-    "pipeline_crawl_frontier",
-    f"""
-    WITH RECURSIVE
-    p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             href,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    cand AS (SELECT DISTINCT href, dst AS dst_host FROM l),
-    e AS (SELECT DISTINCT src, dst FROM l WHERE src <> dst),
-    nodes AS (SELECT DISTINCT node FROM (
-      SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e)),
-    deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY 1),
-    pr(it, node, r) AS (
-      SELECT 0, node, CAST(1000000000 AS BIGINT) FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, r FROM pr)
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               CAST(150000000 AS BIGINT) + (85 * COALESCE(c.s, 0)) // 100
-        FROM nodes n
-        LEFT JOIN (
-          SELECT e.dst, SUM(p.r // deg.d) AS s
-          FROM prev p JOIN e ON e.src = p.node JOIN deg ON deg.src = p.node
-          GROUP BY e.dst
-        ) c ON c.dst = n.node
-        WHERE (SELECT max(it) FROM prev) < 5
-      ) z
-    ),
-    auth AS (SELECT node, r AS rank_scaled FROM pr WHERE it = 5),
-    sched AS (
-      SELECT dst_host, href,
-             row_number() OVER (
-               PARTITION BY dst_host ORDER BY md5(href), href
-             ) AS slot
-      FROM cand
-    )
-    SELECT s.dst_host, a.rank_scaled, s.href, CAST(s.slot AS BIGINT) AS slot
-    FROM sched s JOIN auth a ON a.node = s.dst_host
-    WHERE s.slot <= 3
-    ORDER BY a.rank_scaled DESC, s.dst_host, s.slot
-    """,
-)
-def q_pipeline_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-frontier scheduling: candidate URLs from anchor extraction,
-    host authority from five integer-exact PageRank iterations over the
-    same link graph, a per-host politeness quota of 3 slots picked in
-    content-addressed md5 order (crawl-order-unbiased, retry-stable —
-    the domain_caps idiom, pure rank window so WindowGroupLimit bounds
-    hot hosts), and the fetch order (authority desc, host, slot). The
-    oracle replays candidates, the recursive-CTE power iteration, and
-    the quota window end to end."""
-    from intelligent_ocr_spark.operators.graph import pagerank
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    links = extract_links(_link_pages(spark, sf_dir))
-    cand = links.select("href", "dst_host").distinct()
-    auth = pagerank(host_edges(links), n_iter=5)
-    w = W.partitionBy("dst_host").orderBy(
-        F.md5(F.encode("href", "UTF-8")), "href"
-    )
-    sched = (
-        cand.withColumn("slot", F.row_number().over(w).cast("long"))
-        .filter(F.col("slot") <= 3)
-    )
-    return (
-        sched.join(auth, sched["dst_host"] == auth["node"])
-        .select("dst_host", "rank_scaled", "href", "slot")
-        .orderBy(F.col("rank_scaled").desc(), "dst_host", "slot")
-    )
-
-
-@_q(
-    "web_extract_links_resolved",
-    f"""
-    WITH p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href0
-      FROM p
-    ),
-    r AS (
-      SELECT url,
-             CASE WHEN regexp_matches(href0, '^/([^/]|$)')
-                  THEN regexp_extract(url,
-                         '^([a-z][a-z0-9+.-]*://[^/?#]+)', 1) || href0
-                  ELSE href0 END AS href
-      FROM x
-    )
-    SELECT url AS src_url,
-           regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src_host,
-           href,
-           regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst_host
-    FROM r
-    WHERE regexp_matches(href, '^https?://')
-    ORDER BY src_url, href
-    """,
-)
-def q_web_extract_links_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor extraction with ROOT-relative resolution on: every third
-    page's '/rel/skip' anchor — a skip under the absolute-only scope —
-    now resolves against the page's scheme+authority and appears as a
-    same-host edge, the frontier-discovery behavior real crawls need
-    (intra-site links dominate). Protocol-relative and path-relative
-    hrefs remain out of scope. Same zero-exchange plan."""
-    from intelligent_ocr_spark.operators.web import extract_links
-
-    return extract_links(
-        _link_pages(spark, sf_dir), resolve_root_relative=True
-    ).orderBy("src_url", "href")
-
-
-# Anchor-text synthesis: three rotating multi-token anchor phrases so
-# per-host term profiles have real frequency structure. Byte-identical
-# strings in both engines (|| twin below).
-_ANCHOR_PAGES_SQL = """
-      SELECT 'http://h' || (doc_id % 40) || '.example/d/' || doc_id AS url,
-             '<p>b</p><a href="http://h' || ((doc_id * 7 + 3) % 40)
-             || '.example/p/' || doc_id || '">'
-             || CASE doc_id % 3 WHEN 0 THEN 'spark engine guide'
-                                WHEN 1 THEN 'engine docs' ELSE 'tutorial' END
-             || '</a><a class="n" href="http://h' || ((doc_id * 11 + 5) % 40)
-             || '.example/q">'
-             || CASE doc_id % 2 WHEN 0 THEN 'data guide' ELSE 'spark faq' END
-             || '</a><a href="http://skip.example/n"><b>nested</b></a>' AS html
-      FROM documents WHERE doc_id < 240
-"""
-
-
-def _anchor_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-    s = lambda c: c.cast("string")  # noqa: E731
-    url = F.concat(
-        F.lit("http://h"), s(F.col("doc_id") % 40),
-        F.lit(".example/d/"), s(F.col("doc_id")),
-    )
-    html = F.concat(
-        F.lit('<p>b</p><a href="http://h'),
-        s((F.col("doc_id") * 7 + 3) % 40),
-        F.lit(".example/p/"), s(F.col("doc_id")), F.lit('">'),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("spark engine guide"))
-        .when(F.col("doc_id") % 3 == 1, F.lit("engine docs"))
-        .otherwise(F.lit("tutorial")),
-        F.lit('</a><a class="n" href="http://h'),
-        s((F.col("doc_id") * 11 + 5) % 40),
-        F.lit('.example/q">'),
-        F.when(F.col("doc_id") % 2 == 0, F.lit("data guide"))
-        .otherwise(F.lit("spark faq")),
-        F.lit('</a><a href="http://skip.example/n"><b>nested</b></a>'),
-    )
-    return d.select(url.alias("url"), html.alias("html"))
-
-
-_ANCHOR_RE_SQL = '<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>'
-
-
-@_q(
-    "web_anchor_texts",
-    f"""
-    WITH p AS ({_ANCHOR_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html, '{_ANCHOR_RE_SQL}', 1)) AS href,
-             unnest(regexp_extract_all(html, '{_ANCHOR_RE_SQL}', 2)) AS anchor
-      FROM p
-    )
-    SELECT url AS src_url, href, anchor,
-           regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst_host
-    FROM x
-    WHERE regexp_matches(href, '^https?://')
-    ORDER BY src_url, href
-    """,
-)
-def q_web_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text capture: plain-run anchors become (src_url, href,
-    anchor, dst_host); the nested-tag anchor is skipped by the plain-run
-    scope. Two positionally-aligned regexp_extract_all calls zipped —
-    DuckDB aligns the same two calls with parallel unnest. Zero-exchange
-    projection + Generate (plan-pinned in tests/test_web.py)."""
-    from intelligent_ocr_spark.operators.web import extract_anchor_texts
-
-    return extract_anchor_texts(_anchor_pages(spark, sf_dir)).orderBy(
-        "src_url", "href"
-    )
-
-
-@_q(
-    "web_anchor_profile",
-    f"""
-    WITH p AS ({_ANCHOR_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html, '{_ANCHOR_RE_SQL}', 1)) AS href,
-             unnest(regexp_extract_all(html, '{_ANCHOR_RE_SQL}', 2)) AS anchor
-      FROM p
-    ),
-    a AS (
-      SELECT regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst_host,
-             anchor
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    t AS (
-      SELECT dst_host,
-             unnest(string_split_regex(lower(anchor), '[^a-z0-9]+')) AS term
-      FROM a
-    ),
-    c AS (
-      SELECT dst_host, term, COUNT(*) AS n
-      FROM t WHERE term <> '' GROUP BY 1, 2
-    ),
-    r AS (
-      SELECT dst_host, term, n,
-             row_number() OVER (
-               PARTITION BY dst_host ORDER BY n DESC, term
-             ) AS rank
-      FROM c
-    )
-    SELECT dst_host, term, n, rank FROM r
-    WHERE rank <= 4 ORDER BY dst_host, rank
-    """,
-)
-def q_web_anchor_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-target-host anchor-term profile: top-4 anchor tokens per
-    dst_host with exact counts, rank by (count desc, term). Counting is
-    a map-side-combined groupBy; the per-host cut is the salted top-k
-    tournament over an encoded (count, term) order key — the DuckDB
-    twin's plain ranking window pins tournament equivalence on a second
-    operator family (after index_inverted)."""
-    from intelligent_ocr_spark.operators.web import (
-        extract_anchor_texts,
-        host_anchor_profile,
-    )
-
-    return host_anchor_profile(
-        extract_anchor_texts(_anchor_pages(spark, sf_dir)), k=4
-    ).orderBy("dst_host", "rank")
-
-
-@_q(
-    "web_sitemap_entries",
-    """
-    WITH s AS (
-      SELECT 'h' || (doc_id % 17) || '.example' AS host,
-             CASE WHEN doc_id % 6 = 0 THEN
-               '<sitemapindex><sitemap><loc>http://h' || (doc_id % 17)
-               || '.example/s' || doc_id || 'a.xml</loc><lastmod>2024-0'
-               || (doc_id % 9 + 1) || '-01</lastmod></sitemap><sitemap><loc>'
-               || 'http://h' || (doc_id % 17) || '.example/s' || doc_id
-               || 'b.xml</loc></sitemap></sitemapindex>'
-             ELSE
-               '<?xml version="1.0"?><urlset><url><loc> http://h'
-               || (doc_id % 17) || '.example/p/' || doc_id
-               || ' </loc><lastmod>2024-0' || (doc_id % 9 + 1)
-               || '-15</lastmod></url><url><loc>http://h' || (doc_id % 17)
-               || '.example/q/' || doc_id || '</loc></url></urlset>'
-             END AS sitemap_xml
-      FROM documents WHERE doc_id < 120
-    ),
-    u AS (
-      SELECT host, 'url' AS kind,
-             unnest(regexp_extract_all(sitemap_xml,
-                    '<url>([\\s\\S]*?)</url>', 1)) AS block
-      FROM s
-      UNION ALL
-      SELECT host, 'sitemap',
-             unnest(regexp_extract_all(sitemap_xml,
-                    '<sitemap>([\\s\\S]*?)</sitemap>', 1))
-      FROM s
-    )
-    SELECT host, kind,
-           regexp_extract(block, '<loc>\\s*([^<]*?)\\s*</loc>', 1) AS loc,
-           nullif(regexp_extract(block,
-                  '<lastmod>\\s*([^<]*?)\\s*</lastmod>', 1), '') AS lastmod
-    FROM u
-    WHERE regexp_extract(block, '<loc>\\s*([^<]*?)\\s*</loc>', 1) <> ''
-    ORDER BY host, kind, loc
-    """,
-)
-def q_web_sitemap_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap parsing (sitemaps.org spec): synthesized urlset files
-    (two <url> entries, first with <lastmod>, loc whitespace-trimmed)
-    and sitemapindex files (two <sitemap> children) flatten to
-    (host, kind, loc, lastmod) rows — the frontier's page-fetch and
-    child-sitemap queues from one zero-exchange pass
-    (operators/web.py::parse_sitemaps, plan-pinned)."""
-    from intelligent_ocr_spark.operators.web import parse_sitemaps
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    s = lambda c: c.cast("string")  # noqa: E731
-    host = F.concat(F.lit("h"), s(F.col("doc_id") % 17), F.lit(".example"))
-    hexpr = s(F.col("doc_id") % 17)
-    idx_xml = F.concat(
-        F.lit("<sitemapindex><sitemap><loc>http://h"), hexpr,
-        F.lit(".example/s"), s(F.col("doc_id")),
-        F.lit("a.xml</loc><lastmod>2024-0"), s(F.col("doc_id") % 9 + 1),
-        F.lit("-01</lastmod></sitemap><sitemap><loc>http://h"), hexpr,
-        F.lit(".example/s"), s(F.col("doc_id")),
-        F.lit("b.xml</loc></sitemap></sitemapindex>"),
-    )
-    url_xml = F.concat(
-        F.lit('<?xml version="1.0"?><urlset><url><loc> http://h'), hexpr,
-        F.lit(".example/p/"), s(F.col("doc_id")),
-        F.lit(" </loc><lastmod>2024-0"), s(F.col("doc_id") % 9 + 1),
-        F.lit("-15</lastmod></url><url><loc>http://h"), hexpr,
-        F.lit(".example/q/"), s(F.col("doc_id")),
-        F.lit("</loc></url></urlset>"),
-    )
-    sm = d.select(
-        host.alias("host"),
-        F.when(F.col("doc_id") % 6 == 0, idx_xml).otherwise(url_xml)
-        .alias("sitemap_xml"),
-    )
-    return parse_sitemaps(sm).orderBy("host", "kind", "loc")
-
-
-@_q(
-    "graph_cocitation",
-    f"""
-    WITH p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    e AS (SELECT DISTINCT src AS pv, dst AS node FROM l WHERE src <> dst),
-    deg AS (SELECT pv, COUNT(*) AS d FROM e GROUP BY 1),
-    kept AS (
-      SELECT e.pv, e.node FROM e JOIN deg USING (pv) WHERE deg.d <= 64
-    )
-    SELECT a.node AS node_a, b.node AS node_b,
-           COUNT(*) AS n_common
-    FROM kept a JOIN kept b ON a.pv = b.pv AND a.node < b.node
-    GROUP BY 1, 2
-    ORDER BY node_a, node_b
-    """,
-)
-def q_graph_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-citation host similarity over the link-graph synthesis: pairs
-    of hosts linked from the same source host with exact shared-source
-    counts. Hub sources above degree 64 are excluded up front (the
-    stop-shingle cap idiom — broadcast anti-join), so the pair fan-out
-    is degree-bounded; see operators/graph.py::cocitation_pairs."""
-    from intelligent_ocr_spark.operators.graph import cocitation_pairs
-    from intelligent_ocr_spark.operators.web import extract_links
-
-    links = extract_links(_link_pages(spark, sf_dir))
-    edges = links.select(
-        F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-    )
-    return cocitation_pairs(edges, max_degree=64).orderBy("node_a", "node_b")
-
-
-@_q(
-    "graph_trustrank",
-    f"""
-    WITH RECURSIVE
-    p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    e AS (SELECT DISTINCT src, dst FROM l WHERE src <> dst),
-    nodes AS (
-      SELECT node,
-             CAST(regexp_extract(node, '^h([0-9]+)', 1) AS BIGINT) % 8 = 0
-               AS is_seed
-      FROM (SELECT DISTINCT node FROM (
-        SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e))
-    ),
-    deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY 1),
-    pr(it, node, r) AS (
-      SELECT 0, node,
-             CASE WHEN is_seed THEN CAST(1000000000 AS BIGINT)
-                  ELSE CAST(0 AS BIGINT) END
-      FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, r FROM pr)
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               CASE WHEN n.is_seed THEN CAST(150000000 AS BIGINT)
-                    ELSE CAST(0 AS BIGINT) END
-               + (85 * COALESCE(c.s, 0)) // 100
-        FROM nodes n
-        LEFT JOIN (
-          SELECT e.dst, SUM(p.r // deg.d) AS s
-          FROM prev p JOIN e ON e.src = p.node JOIN deg ON deg.src = p.node
-          GROUP BY e.dst
-        ) c ON c.dst = n.node
-        WHERE (SELECT max(it) FROM prev) < 5
-      ) z
-    )
-    SELECT node, r AS rank_scaled FROM pr WHERE it = 5 ORDER BY node
-    """,
-)
-def q_graph_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TrustRank (personalized PageRank, Gyöngyi et al. 2004): restart
-    mass lands only on the trusted seed hosts (host number ≡ 0 mod 8),
-    so authority flows outward from the seed set — the structural
-    quality/spam signal computed next to global web_pagerank. Same
-    integer-exact iteration plan; the seed flag joins the checkpointed
-    node list once (broadcast). The oracle replays the seeded restart
-    in the recursive CTE bit-for-bit."""
-    from intelligent_ocr_spark.operators.graph import pagerank
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    edges = host_edges(extract_links(_link_pages(spark, sf_dir)))
-    nodes = edges.selectExpr("src as node").union(
-        edges.selectExpr("dst as node")
-    ).distinct()
-    seeds = nodes.filter(
-        F.regexp_extract("node", r"^h([0-9]+)", 1).cast("long") % 8 == 0
-    )
-    return pagerank(edges, n_iter=5, seeds=seeds).orderBy("node")
 
 
 @_q(
@@ -4399,167 +3652,6 @@ def q_prep_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "pipeline_host_profile",
-    f"""
-    WITH RECURSIVE
-    p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    e AS (SELECT DISTINCT src, dst FROM l WHERE src <> dst),
-    nodes AS (SELECT DISTINCT node FROM (
-      SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e)),
-    deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY 1),
-    pr(it, node, r) AS (
-      SELECT 0, node, CAST(1000000000 AS BIGINT) FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, r FROM pr)
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               CAST(150000000 AS BIGINT) + (85 * COALESCE(c.s, 0)) // 100
-        FROM nodes n
-        LEFT JOIN (
-          SELECT e.dst, SUM(p.r // deg.d) AS s
-          FROM prev p JOIN e ON e.src = p.node JOIN deg ON deg.src = p.node
-          GROUP BY e.dst
-        ) c ON c.dst = n.node
-        WHERE (SELECT max(it) FROM prev) < 5
-      ) z
-    ),
-    auth AS (SELECT node, r AS rank_scaled FROM pr WHERE it = 5),
-    d AS (
-      SELECT doc_id, 'h' || (doc_id % 40) || '.example' AS host,
-             CASE WHEN doc_id % 7 = 0 THEN 'boilerplate page'
-                  ELSE text END AS t
-      FROM documents WHERE doc_id < 240
-    ),
-    hc AS (SELECT md5(t) AS h, COUNT(*) AS c FROM d GROUP BY 1),
-    m AS (
-      SELECT d.host, COUNT(*) AS n_docs,
-             COUNT(*) FILTER (WHERE hc.c > 1) AS n_dup_docs
-      FROM d JOIN hc ON md5(d.t) = hc.h
-      GROUP BY 1
-    )
-    SELECT m.host, CAST(m.n_docs AS BIGINT) AS n_docs,
-           CAST(m.n_dup_docs AS BIGINT) AS n_dup_docs,
-           (m.n_dup_docs * 1000000) // m.n_docs AS dup_ppm,
-           a.rank_scaled
-    FROM m JOIN auth a ON a.node = m.host
-    ORDER BY host
-    """,
-)
-def q_pipeline_host_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host quality profile — the seed-list curation artifact: per host,
-    document count, exact-duplicate document count (every 7th doc
-    collapses to a shared boilerplate page; dup marking via a
-    map-side-combined hash-count groupBy joined back, the HH-safe
-    idiom), duplication rate in integer ppm, and link authority from
-    five integer-exact PageRank iterations over the same synthesis.
-    Composes content signals with graph signals across one join key."""
-    from intelligent_ocr_spark.operators.graph import pagerank
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    auth = pagerank(host_edges(extract_links(_link_pages(spark, sf_dir))), n_iter=5)
-    d = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 240)
-        .select(
-            F.concat(
-                F.lit("h"), (F.col("doc_id") % 40).cast("string"),
-                F.lit(".example"),
-            ).alias("host"),
-            F.when(F.col("doc_id") % 7 == 0, F.lit("boilerplate page"))
-            .otherwise(F.col("text"))
-            .alias("t"),
-        )
-        .withColumn("h", F.md5(F.col("t").cast("binary")))
-    )
-    hc = d.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
-    m = (
-        d.join(hc, "h")
-        .groupBy("host")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count(F.when(F.col("c") > 1, 1)).alias("n_dup_docs"),
-        )
-    )
-    return (
-        m.join(auth, m["host"] == auth["node"])
-        .select(
-            "host",
-            "n_docs",
-            "n_dup_docs",
-            F.expr("(n_dup_docs * 1000000) div n_docs").alias("dup_ppm"),
-            "rank_scaled",
-        )
-        .orderBy("host")
-    )
-
-
-@_q(
-    "graph_pagerank_scaled",
-    """
-    WITH RECURSIVE
-    raw AS (
-      SELECT doc_id % 509 AS src, (doc_id * 7 + 3) % 509 AS dst
-      FROM documents
-      UNION ALL
-      SELECT doc_id % 509, (doc_id * 11 + 5) % 509
-      FROM documents
-    ),
-    e AS (SELECT DISTINCT src, dst FROM raw WHERE src <> dst),
-    nodes AS (SELECT DISTINCT node FROM (
-      SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e)),
-    deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY 1),
-    pr(it, node, r) AS (
-      SELECT 0, node, CAST(1000000000 AS BIGINT) FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, r FROM pr)
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               CAST(150000000 AS BIGINT) + (85 * COALESCE(c.s, 0)) // 100
-        FROM nodes n
-        LEFT JOIN (
-          SELECT e.dst, SUM(p.r // deg.d) AS s
-          FROM prev p JOIN e ON e.src = p.node JOIN deg ON deg.src = p.node
-          GROUP BY e.dst
-        ) c ON c.dst = n.node
-        WHERE (SELECT max(it) FROM prev) < 5
-      ) z
-    )
-    SELECT node, r AS rank_scaled FROM pr WHERE it = 5 ORDER BY node
-    """,
-)
-def q_graph_pagerank_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank whose edge count scales with the table (two
-    deterministic out-links per document over 509 node buckets, no row
-    cap) — the bench-trendable twin of web_pagerank: per-sf wall time
-    reflects the join+agg iteration cost, not a fixed 240-doc
-    synthesis."""
-    from intelligent_ocr_spark.operators.graph import pagerank
-
-    d = _t(spark, sf_dir, "documents")
-    raw = d.select(
-        (F.col("doc_id") % 509).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 509).alias("dst"),
-    ).union(
-        d.select(
-            (F.col("doc_id") % 509).alias("src"),
-            ((F.col("doc_id") * 11 + 5) % 509).alias("dst"),
-        )
-    )
-    return pagerank(raw, n_iter=5).orderBy("node")
-
-
-@_q(
     "index_inverted_full",
     """
     WITH t0 AS (
@@ -4593,260 +3685,6 @@ def q_index_inverted_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return inverted_index(
         _t(spark, sf_dir, "documents"), max_postings=16
     ).orderBy("term")
-
-
-@_q(
-    "graph_degree_stats",
-    f"""
-    WITH p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    e AS (SELECT DISTINCT src, dst FROM l WHERE src <> dst),
-    od AS (SELECT src AS node, COUNT(*) AS deg FROM e GROUP BY 1),
-    id_ AS (SELECT dst AS node, COUNT(*) AS deg FROM e GROUP BY 1)
-    SELECT dir, deg, CAST(COUNT(*) AS BIGINT) AS n_hosts
-    FROM (
-      SELECT 'out' AS dir, deg FROM od
-      UNION ALL
-      SELECT 'in', deg FROM id_
-    )
-    GROUP BY dir, deg
-    ORDER BY dir, deg
-    """,
-)
-def q_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree distribution of the host link graph (the power-law census
-    every web-graph paper opens with): per direction, how many hosts
-    have each in/out-degree. Two map-side-combined groupBys over the
-    deduplicated edge set — degree keys are tiny, the distribution
-    rows tinier."""
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    e = host_edges(extract_links(_link_pages(spark, sf_dir)))
-    od = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).select(F.lit("out").alias("dir"), "deg")
-    ind = e.groupBy(F.col("dst").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).select(F.lit("in").alias("dir"), "deg")
-    return (
-        od.unionAll(ind)
-        .groupBy("dir", "deg")
-        .agg(F.count(F.lit(1)).alias("n_hosts"))
-        .orderBy("dir", "deg")
-    )
-
-
-@_q(
-    "graph_spam_mass",
-    f"""
-    WITH RECURSIVE
-    p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    e AS (SELECT DISTINCT src, dst FROM l WHERE src <> dst),
-    nodes AS (
-      SELECT node,
-             CAST(regexp_extract(node, '^h([0-9]+)', 1) AS BIGINT) % 8 = 0
-               AS is_seed
-      FROM (SELECT DISTINCT node FROM (
-        SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e))
-    ),
-    deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY 1),
-    pr(it, node, r) AS (
-      SELECT 0, node, CAST(1000000000 AS BIGINT) FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, r FROM pr)
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               CAST(150000000 AS BIGINT) + (85 * COALESCE(c.s, 0)) // 100
-        FROM nodes n
-        LEFT JOIN (
-          SELECT e.dst, SUM(p.r // deg.d) AS s
-          FROM prev p JOIN e ON e.src = p.node JOIN deg ON deg.src = p.node
-          GROUP BY e.dst
-        ) c ON c.dst = n.node
-        WHERE (SELECT max(it) FROM prev) < 5
-      ) z
-    ),
-    -- trust run: restart mass scaled to the whole graph's —
-    -- 40 nodes / 5 seeds → per-seed scale 8e9, base (15*8e9)//100
-    tr(it, node, r) AS (
-      SELECT 0, node,
-             CASE WHEN is_seed THEN CAST(8000000000 AS BIGINT)
-                  ELSE CAST(0 AS BIGINT) END
-      FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, r FROM tr)
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               CASE WHEN n.is_seed THEN CAST(1200000000 AS BIGINT)
-                    ELSE CAST(0 AS BIGINT) END
-               + (85 * COALESCE(c.s, 0)) // 100
-        FROM nodes n
-        LEFT JOIN (
-          SELECT e.dst, SUM(p.r // deg.d) AS s
-          FROM prev p JOIN e ON e.src = p.node JOIN deg ON deg.src = p.node
-          GROUP BY e.dst
-        ) c ON c.dst = n.node
-        WHERE (SELECT max(it) FROM prev) < 5
-      ) z
-    )
-    SELECT g.node, g.r AS pr_scaled, t.r AS tr_scaled,
-           ((g.r - t.r) * 1000000) // g.r AS spam_mass_ppm
-    FROM (SELECT node, r FROM pr WHERE it = 5) g
-    JOIN (SELECT node, r FROM tr WHERE it = 5) t USING (node)
-    ORDER BY node
-    """,
-)
-def q_graph_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spam mass (Gyöngyi et al. 2004): the fraction of a host's
-    PageRank NOT explainable by trusted seeds — global PR next to a
-    TrustRank run whose total restart mass matches (per-seed scale ×
-    n_nodes/n_seeds = 8e9 for the 40-host/5-seed synthesis), spam mass
-    in integer ppm (negative for over-trusted seeds, exact in both
-    engines). Two power-iteration chains over one localCheckpoint-ed
-    edge table; the oracle replays both recursive CTEs and the ppm
-    division bit-for-bit."""
-    from intelligent_ocr_spark.operators.graph import pagerank
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    edges = host_edges(extract_links(_link_pages(spark, sf_dir)))
-    nodes = edges.selectExpr("src as node").union(
-        edges.selectExpr("dst as node")
-    ).distinct()
-    seeds = nodes.filter(
-        F.regexp_extract("node", r"^h([0-9]+)", 1).cast("long") % 8 == 0
-    )
-    pr = pagerank(edges, n_iter=5).withColumnRenamed("rank_scaled", "pr_scaled")
-    tr = pagerank(
-        edges, n_iter=5, seeds=seeds, scale=8 * 10**9
-    ).withColumnRenamed("rank_scaled", "tr_scaled")
-    return (
-        pr.join(tr, "node")
-        .select(
-            "node",
-            "pr_scaled",
-            "tr_scaled",
-            F.expr("((pr_scaled - tr_scaled) * 1000000) div pr_scaled")
-            .alias("spam_mass_ppm"),
-        )
-        .orderBy("node")
-    )
-
-
-@_q(
-    "web_sitemap_recursive",
-    """
-    WITH idx AS (
-      SELECT 'h' || (doc_id % 11) || '.example' AS host,
-             '<sitemapindex><sitemap><loc>http://h' || (doc_id % 11)
-             || '.example/s' || doc_id || '.xml</loc></sitemap>'
-             || '</sitemapindex>' AS sitemap_xml
-      FROM documents WHERE doc_id < 66
-    ),
-    child AS (
-      SELECT 'http://h' || (doc_id % 11) || '.example/s' || doc_id
-               || '.xml' AS loc,
-             '<urlset><url><loc>http://h' || (doc_id % 11)
-             || '.example/p/' || doc_id || '</loc></url><url><loc>'
-             || 'http://h' || (doc_id % 11) || '.example/q/' || doc_id
-             || '</loc></url></urlset>' AS sitemap_xml
-      FROM documents WHERE doc_id < 66
-    ),
-    lvl1 AS (
-      SELECT host, 'sitemap' AS kind,
-             unnest(regexp_extract_all(sitemap_xml,
-                    '<sitemap>([\\s\\S]*?)</sitemap>', 1)) AS block
-      FROM idx
-    ),
-    refs AS (
-      SELECT host,
-             regexp_extract(block, '<loc>\\s*([^<]*?)\\s*</loc>', 1) AS loc
-      FROM lvl1
-      WHERE regexp_extract(block, '<loc>\\s*([^<]*?)\\s*</loc>', 1) <> ''
-    ),
-    lvl2 AS (
-      SELECT r.host,
-             unnest(regexp_extract_all(c.sitemap_xml,
-                    '<url>([\\s\\S]*?)</url>', 1)) AS block
-      FROM refs r JOIN child c ON c.loc = r.loc
-    )
-    SELECT host,
-           regexp_extract(block, '<loc>\\s*([^<]*?)\\s*</loc>', 1) AS loc,
-           CAST(count(*) OVER (PARTITION BY host) AS BIGINT) AS n_host_urls
-    FROM lvl2
-    WHERE regexp_extract(block, '<loc>\\s*([^<]*?)\\s*</loc>', 1) <> ''
-    ORDER BY host, loc
-    """,
-)
-def q_web_sitemap_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap-index recursion, one level: parse index files to child
-    sitemap locs, equi-join the fetched child bodies on loc (the shape
-    a crawl's fetch step produces), parse the children to page URLs,
-    and count per host. Both parse levels are the same zero-exchange
-    parse_sitemaps operator; the only exchanges are the loc join and
-    the per-host count."""
-    from intelligent_ocr_spark.operators.web import parse_sitemaps
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 66)
-    s = lambda c: c.cast("string")  # noqa: E731
-    hexpr = s(F.col("doc_id") % 11)
-    idx = d.select(
-        F.concat(F.lit("h"), hexpr, F.lit(".example")).alias("host"),
-        F.concat(
-            F.lit("<sitemapindex><sitemap><loc>http://h"), hexpr,
-            F.lit(".example/s"), s(F.col("doc_id")),
-            F.lit(".xml</loc></sitemap></sitemapindex>"),
-        ).alias("sitemap_xml"),
-    )
-    child = d.select(
-        F.concat(
-            F.lit("http://h"), hexpr, F.lit(".example/s"),
-            s(F.col("doc_id")), F.lit(".xml"),
-        ).alias("cloc"),
-        F.concat(
-            F.lit("<urlset><url><loc>http://h"), hexpr,
-            F.lit(".example/p/"), s(F.col("doc_id")),
-            F.lit("</loc></url><url><loc>http://h"), hexpr,
-            F.lit(".example/q/"), s(F.col("doc_id")),
-            F.lit("</loc></url></urlset>"),
-        ).alias("sitemap_xml"),
-    )
-    refs = (
-        parse_sitemaps(idx)
-        .filter(F.col("kind") == "sitemap")
-        .select("host", F.col("loc").alias("cloc"))
-    )
-    lvl2 = parse_sitemaps(
-        refs.join(child, "cloc").select("host", "sitemap_xml")
-    ).filter(F.col("kind") == "url")
-    return (
-        lvl2.withColumn(
-            "n_host_urls",
-            F.count(F.lit(1)).over(W.partitionBy("host")),
-        )
-        .select("host", "loc", "n_host_urls")
-        .orderBy("host", "loc")
-    )
 
 
 @_q(
@@ -4900,145 +3738,6 @@ def q_index_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return bm25_topk(
         _t(spark, sf_dir, "documents"), ["window", "join", "spark"], k=10
-    )
-
-
-@_q(
-    "graph_label_propagation",
-    f"""
-    WITH RECURSIVE
-    p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    e AS (SELECT DISTINCT src, dst FROM l WHERE src <> dst),
-    nodes AS (
-      SELECT node,
-             CASE WHEN CAST(regexp_extract(node, '^h([0-9]+)', 1) AS BIGINT)
-                       % 8 = 0
-                  THEN 'L' || (CAST(regexp_extract(node, '^h([0-9]+)', 1)
-                                    AS BIGINT) % 3)
-             END AS seed_label
-      FROM (SELECT DISTINCT node FROM (
-        SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e))
-    ),
-    lp(it, node, label) AS (
-      SELECT 0, node, seed_label FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, label FROM lp)
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               COALESCE(n.seed_label, w.win_label, pv.label)
-        FROM nodes n
-        LEFT JOIN (
-          SELECT dst,
-                 arg_min(label,
-                         lpad(CAST(1000000000 - n AS VARCHAR), 10, '0')
-                         || label) AS win_label
-          FROM (
-            SELECT e.dst, p.label, COUNT(*) AS n
-            FROM prev p JOIN e ON e.src = p.node
-            WHERE p.label IS NOT NULL
-            GROUP BY 1, 2
-          ) GROUP BY dst
-        ) w ON w.dst = n.node
-        LEFT JOIN prev pv ON pv.node = n.node
-        WHERE (SELECT max(it) FROM prev) < 3
-      ) z
-    )
-    SELECT node, label FROM lp WHERE it = 3 ORDER BY node
-    """,
-)
-def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label propagation over the host graph: five seed hosts (number ≡
-    0 mod 8) carry labels L0/L1/L2; three rounds of adopt-the-majority-
-    in-neighbor-label with deterministic argmax (min_by over the
-    encoded (votes desc, label asc) key — arg_min of the same key in
-    DuckDB), seeds immutable, unlabeled nodes keep their previous
-    state. The semi-supervised host-classification baseline
-    (operators/graph.py::label_propagation); the oracle replays all
-    three rounds in a recursive CTE."""
-    from intelligent_ocr_spark.operators.graph import label_propagation
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    edges = host_edges(extract_links(_link_pages(spark, sf_dir)))
-    nodes = edges.selectExpr("src as node").union(
-        edges.selectExpr("dst as node")
-    ).distinct()
-    num = F.regexp_extract("node", r"^h([0-9]+)", 1).cast("long")
-    seeds = nodes.filter(num % 8 == 0).select(
-        "node", F.concat(F.lit("L"), (num % 3).cast("string")).alias("label")
-    )
-    return label_propagation(edges, seeds, n_iter=3).orderBy("node")
-
-
-@_q(
-    "graph_components",
-    f"""
-    WITH RECURSIVE
-    p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    pr0 AS (
-      SELECT DISTINCT least(src, dst) AS doc_a, greatest(src, dst) AS doc_b
-      FROM l WHERE src <> dst
-    ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pr0
-      UNION SELECT doc_b, doc_a FROM pr0
-    ),
-    cc AS (
-      SELECT src AS node, src AS label FROM edges
-      UNION
-      SELECT e.dst, c.label FROM cc c JOIN edges e ON c.node = e.src
-    )
-    SELECT node, min(label) AS component_id
-    FROM cc GROUP BY node ORDER BY node
-    """,
-)
-def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components of the UNDIRECTED host graph — mirror-family
-    / site-cluster detection from pure structure. Reuses the
-    large-star/small-star dedup component engine (O(log n) rounds
-    regardless of diameter) on host-string nodes; the oracle computes
-    the same components by recursive transitive closure with
-    lexicographic-min labels."""
-    from intelligent_ocr_spark.operators.dedup import near_dup_clusters
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    e = host_edges(extract_links(_link_pages(spark, sf_dir)))
-    pairs = (
-        e.select(
-            F.least("src", "dst").alias("doc_a"),
-            F.greatest("src", "dst").alias("doc_b"),
-        )
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .distinct()
-    )
-    return (
-        near_dup_clusters(pairs)
-        .select(
-            F.col("doc_id").alias("node"),
-            F.col("cluster_id").alias("component_id"),
-        )
-        .orderBy("node")
     )
 
 
@@ -5802,279 +4501,6 @@ def q_prep_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "graph_hits",
-    f"""
-    WITH RECURSIVE
-    p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    e AS (SELECT DISTINCT src, dst FROM l WHERE src <> dst),
-    nodes AS (SELECT DISTINCT node FROM (
-      SELECT src AS node FROM e UNION ALL SELECT dst AS node FROM e)),
-    hs(it, node, hub, auth) AS (
-      SELECT 0, node, CAST(1 AS HUGEINT), CAST(0 AS HUGEINT) FROM nodes
-      UNION ALL
-      SELECT * FROM (
-        WITH prev AS (SELECT it, node, hub, auth FROM hs),
-        na AS (
-          SELECT e.dst AS node, SUM(pr.hub) AS a
-          FROM prev pr JOIN e ON e.src = pr.node GROUP BY 1
-        ),
-        nh AS (
-          SELECT e.src AS node, SUM(na.a) AS h
-          FROM e JOIN na ON na.node = e.dst GROUP BY 1
-        )
-        SELECT (SELECT max(it) FROM prev) + 1, n.node,
-               CAST(COALESCE(nh.h, 0) AS HUGEINT),
-               CAST(COALESCE(na.a, 0) AS HUGEINT)
-        FROM nodes n
-        LEFT JOIN na ON na.node = n.node
-        LEFT JOIN nh ON nh.node = n.node
-        WHERE (SELECT max(it) FROM prev) < 3
-      ) z
-    )
-    SELECT node, CAST(hub AS BIGINT) AS hub, CAST(auth AS BIGINT) AS auth
-    FROM hs WHERE it = 3 ORDER BY node
-    """,
-)
-def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs/authorities over the synthesized host graph: three
-    unnormalized integer mutual-reinforcement rounds (rank-equivalent
-    to the L2-normalized textbook form — the per-round normalizer is a
-    scalar), computed in decimal(38,0) so the DuckDB HUGEINT recursive
-    CTE replays them bit-exactly. The second classic authority signal
-    next to PageRank: auth finds content authorities, hub the directory
-    pages pointing at them (operators/graph.py::hits; the fixture's
-    values fit BIGINT, so both engines cast for the driver hash)."""
-    from intelligent_ocr_spark.operators.graph import hits
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    edges = host_edges(extract_links(_link_pages(spark, sf_dir)))
-    return (
-        hits(edges, n_iter=3)
-        .select(
-            "node",
-            F.col("hub").cast("long").alias("hub"),
-            F.col("auth").cast("long").alias("auth"),
-        )
-        .orderBy("node")
-    )
-
-
-# Relative-link fixture: pages whose anchors exercise every resolve_href
-# case (path/proto/root/query-relative, ups, fragments, foreign schemes),
-# a quarter of them under an absolute <base href>. Byte-identical twins.
-_RELREF_PAGES_SQL = """
-      SELECT 'http://s' || (doc_id % 20) || '.example/d' || (doc_id % 7)
-               || '/sub/p' || doc_id || '.html' AS url,
-             '<html>'
-             || CASE WHEN doc_id % 4 = 1
-                     THEN '<base href="http://cdn' || (doc_id % 5)
-                          || '.example/as/deep/">' ELSE '' END
-             || '<a href="'
-             || CASE doc_id % 8
-                  WHEN 0 THEN 'img/i' || doc_id || '.png'
-                  WHEN 1 THEN '../up' || doc_id || '.html'
-                  WHEN 2 THEN '../../o' || doc_id || '.html'
-                  WHEN 3 THEN './here' || doc_id || '.html'
-                  WHEN 4 THEN '//pp' || (doc_id % 6) || '.example/pr'
-                  WHEN 5 THEN '/rootp/' || doc_id
-                  WHEN 6 THEN '?q=' || doc_id
-                  ELSE 'http://abs' || (doc_id % 9) || '.example/z'
-                END
-             || '">x</a><a href="#frag">n</a><a href="mailto:x@y">n</a>'
-             || '</html>' AS html
-      FROM documents WHERE doc_id < 160
-"""
-
-
-def _relref_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 160)
-    s = lambda c: c.cast("string")  # noqa: E731
-    url = F.concat(
-        F.lit("http://s"), s(F.col("doc_id") % 20),
-        F.lit(".example/d"), s(F.col("doc_id") % 7),
-        F.lit("/sub/p"), s(F.col("doc_id")), F.lit(".html"),
-    )
-    link = (
-        F.when(F.col("doc_id") % 8 == 0,
-               F.concat(F.lit("img/i"), s(F.col("doc_id")), F.lit(".png")))
-        .when(F.col("doc_id") % 8 == 1,
-              F.concat(F.lit("../up"), s(F.col("doc_id")), F.lit(".html")))
-        .when(F.col("doc_id") % 8 == 2,
-              F.concat(F.lit("../../o"), s(F.col("doc_id")), F.lit(".html")))
-        .when(F.col("doc_id") % 8 == 3,
-              F.concat(F.lit("./here"), s(F.col("doc_id")), F.lit(".html")))
-        .when(F.col("doc_id") % 8 == 4,
-              F.concat(F.lit("//pp"), s(F.col("doc_id") % 6),
-                       F.lit(".example/pr")))
-        .when(F.col("doc_id") % 8 == 5,
-              F.concat(F.lit("/rootp/"), s(F.col("doc_id"))))
-        .when(F.col("doc_id") % 8 == 6,
-              F.concat(F.lit("?q="), s(F.col("doc_id"))))
-        .otherwise(
-            F.concat(F.lit("http://abs"), s(F.col("doc_id") % 9),
-                     F.lit(".example/z")))
-    )
-    html = F.concat(
-        F.lit("<html>"),
-        F.when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(F.lit('<base href="http://cdn'), s(F.col("doc_id") % 5),
-                     F.lit('.example/as/deep/">')),
-        ).otherwise(F.lit("")),
-        F.lit('<a href="'), link,
-        F.lit('">x</a><a href="#frag">n</a><a href="mailto:x@y">n</a></html>'),
-    )
-    return d.select(url.alias("url"), html.alias("html"))
-
-
-@_q(
-    "web_links_base_resolved",
-    f"""
-    WITH p AS ({_RELREF_PAGES_SQL}),
-    x AS (
-      SELECT url AS src_url,
-             regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1)
-               AS src_host,
-             CASE WHEN regexp_matches(
-                    regexp_extract(html, '<base\\s[^>]*href="([^"]*)"', 1),
-                    '^https?://')
-                  THEN regexp_extract(html, '<base\\s[^>]*href="([^"]*)"', 1)
-                  ELSE url END AS base,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    b AS (
-      SELECT *,
-             regexp_extract(base, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)
-               AS scheme,
-             regexp_extract(base, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1)
-               AS authority,
-             regexp_extract(base,
-                    '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS bpath
-      FROM x
-    ),
-    c AS (
-      SELECT *,
-             CASE WHEN regexp_replace(bpath, '[^/]*$', '') = '' THEN '/'
-                  ELSE regexp_replace(bpath, '[^/]*$', '') END AS bdir,
-             regexp_extract(href, '^((\\.\\.?/)+)', 1) AS pfx
-      FROM b
-    ),
-    d AS (
-      SELECT *,
-             (length(pfx) - length(replace(pfx, '../', ''))) // 3 AS n_up,
-             substr(href, length(pfx) + 1) AS rest,
-             list_filter(str_split(bdir, '/'), s -> s <> '') AS segs
-      FROM c
-    ),
-    e AS (
-      SELECT *, list_slice(segs, 1, greatest(len(segs) - n_up, 0)) AS kept
-      FROM d
-    ),
-    r AS (
-      SELECT src_url, src_host, href,
-             CASE
-               WHEN regexp_matches(href, '^https?://') THEN href
-               WHEN regexp_matches(href, '^[A-Za-z][A-Za-z0-9+.-]*:')
-                 THEN NULL
-               WHEN starts_with(href, '//') THEN scheme || ':' || href
-               WHEN starts_with(href, '/') THEN authority || href
-               WHEN href = '' OR starts_with(href, '#') THEN NULL
-               WHEN starts_with(href, '?') THEN authority ||
-                    (CASE WHEN bpath = '' THEN '/' ELSE bpath END) || href
-               -- array_to_string over an EMPTY list is NULL in DuckDB
-               -- (Spark array_join gives ''), so coalesce to keep the
-               -- concatenation total
-               ELSE authority || '/' ||
-                    COALESCE(array_to_string(kept, '/'), '') ||
-                    (CASE WHEN len(kept) > 0 THEN '/' ELSE '' END) || rest
-             END AS resolved
-      FROM e
-    )
-    SELECT src_url, src_host, href, resolved,
-           regexp_extract(resolved, '^https?://([^/:?#]+)', 1) AS dst_host
-    FROM r
-    WHERE resolved IS NOT NULL AND regexp_matches(resolved, '^https?://')
-    ORDER BY src_url, href
-    """,
-)
-def q_web_links_base_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full relative-href resolution with <base href> support over the
-    relative-link fixture: path-relative merges (leading ./ and ../
-    runs popped against the base directory, clamped at root),
-    protocol-relative, root-relative and query-only refs resolve;
-    fragment-only and foreign-scheme refs drop; an absolute <base>
-    rebases both path- and root-relative links. Zero-exchange
-    projection + Generate (plan-pinned in tests/test_web.py); the
-    oracle replays the identical CASE chain step by step
-    (operators/web.py::extract_links_base_resolved,
-    functions/urlnorm.py::resolve_href)."""
-    from intelligent_ocr_spark.operators.web import extract_links_base_resolved
-
-    return extract_links_base_resolved(_relref_pages(spark, sf_dir)).orderBy(
-        "src_url", "href"
-    )
-
-
-@_q(
-    "web_anchor_pairs",
-    f"""
-    WITH p AS ({_ANCHOR_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html, '{_ANCHOR_RE_SQL}', 1)) AS href,
-             unnest(regexp_extract_all(html, '{_ANCHOR_RE_SQL}', 2)) AS anchor
-      FROM p
-    ),
-    a AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1)
-               AS src_host,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst_host,
-             anchor
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    t AS (
-      SELECT src_host, dst_host,
-             unnest(string_split_regex(lower(anchor), '[^a-z0-9]+')) AS term
-      FROM a WHERE src_host <> dst_host
-    )
-    SELECT term, dst_host, COUNT(*) AS n_mentions,
-           COUNT(DISTINCT src_host) AS n_src_hosts
-    FROM t WHERE term <> ''
-    GROUP BY 1, 2 HAVING COUNT(DISTINCT src_host) >= 2
-    ORDER BY term, dst_host
-    """,
-)
-def q_web_anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text retrieval-pair mining over the anchor fixture:
-    cross-host anchors tokenize into (term, dst_host) weak-relevance
-    pairs with exact mention counts, gated on ≥2 distinct supporting
-    source hosts (the anti-spam vote rule). One map-side-combined
-    aggregation with a two-level count-distinct — no joins, no
-    windows (operators/web.py::anchor_retrieval_pairs)."""
-    from intelligent_ocr_spark.operators.web import (
-        anchor_retrieval_pairs,
-        extract_anchor_texts,
-    )
-
-    return anchor_retrieval_pairs(
-        extract_anchor_texts(_anchor_pages(spark, sf_dir))
-    ).orderBy("term", "dst_host")
-
-
-@_q(
     "sketch_bloom",
     """
     WITH seen AS (SELECT 'u' || (doc_id % 499) AS k FROM documents),
@@ -6248,92 +4674,6 @@ def q_index_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "web_crawl_budget",
-    rf"""
-    WITH robots(host, robots_txt) AS (VALUES {_ROBOTS_SQL_VALUES}),
-    rlines AS (
-      SELECT host, u.i AS idx, parts[CAST(u.i AS INT)] AS line
-      FROM (SELECT host, string_split(robots_txt, chr(10)) AS parts FROM robots),
-           unnest(range(1, CAST(len(parts)+1 AS BIGINT))) AS u(i)
-    ), parsed AS (
-      SELECT host, idx,
-             lower(trim(regexp_extract(line, '^\s*([A-Za-z-]+)\s*:', 1))) AS k,
-             trim(regexp_extract(line, '^[^:#]*:\s*([^#]*)', 1)) AS v
-      FROM rlines
-      WHERE lower(trim(regexp_extract(line, '^\s*([A-Za-z-]+)\s*:', 1))) <> ''
-    ), runs AS (
-      SELECT *, CASE WHEN (k = 'user-agent') AND NOT COALESCE(
-                 lag(k = 'user-agent') OVER (PARTITION BY host ORDER BY idx),
-                 false) THEN 1 ELSE 0 END AS new_grp
-      FROM parsed
-    ), grouped AS (
-      SELECT *, sum(new_grp) OVER (PARTITION BY host ORDER BY idx) AS grp
-      FROM runs
-    ), star AS (
-      SELECT DISTINCT host, grp FROM grouped WHERE k = 'user-agent' AND v = '*'
-    ), delays AS (
-      SELECT g.host, MAX(CAST(g.v AS BIGINT)) AS crawl_delay_s
-      FROM grouped g JOIN star s ON g.host = s.host AND g.grp = s.grp
-      WHERE g.k = 'crawl-delay' AND regexp_matches(g.v, '^\d+$')
-      GROUP BY 1
-    ), hosts AS (
-      SELECT 'h' || (doc_id % 17) || '.example.org' AS host,
-             COUNT(*) AS n_urls
-      FROM documents GROUP BY 1
-    )
-    SELECT h.host, COALESCE(d.crawl_delay_s, 1) AS crawl_delay_s, h.n_urls,
-           (h.n_urls * COALESCE(d.crawl_delay_s, 1) + 3599) // 3600
-             AS fetch_hours
-    FROM hosts h LEFT JOIN delays d USING (host) ORDER BY host
-    """,
-)
-def q_web_crawl_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Politeness-budgeted fetch schedule: per-host Crawl-delay from
-    the *-groups (max of declarations, integer values only, default
-    1 s where absent) joined to each host's URL count → hours needed
-    to crawl the host at its declared rate (ceil in exact integer
-    arithmetic — both engines compute (n·d + 3599) div 3600). The
-    frontier-planning number politeness-aware schedulers shard on.
-    Broadcast |hosts|-row delay join, one map-side-combined count
-    (operators/web.py::robots_crawl_delay)."""
-    from intelligent_ocr_spark.operators.web import robots_crawl_delay
-
-    robots = spark.createDataFrame(
-        [
-            (f"h{i}.example.org", _ROBOTS_FIXTURE[i % 4])
-            for i in range(17)
-            if _ROBOTS_FIXTURE[i % 4] is not None
-        ],
-        "host string, robots_txt string",
-    )
-    host = F.concat(
-        F.lit("h"), (F.col("doc_id") % 17).cast("string"),
-        F.lit(".example.org"),
-    )
-    counts = (
-        _t(spark, sf_dir, "documents")
-        .select(host.alias("host"))
-        .groupBy("host")
-        .agg(F.count(F.lit(1)).alias("n_urls"))
-    )
-    return (
-        counts.join(F.broadcast(robots_crawl_delay(robots)), "host", "left")
-        .withColumn(
-            "crawl_delay_s", F.coalesce("crawl_delay_s", F.lit(1).cast("long"))
-        )
-        .select(
-            "host",
-            "crawl_delay_s",
-            "n_urls",
-            F.expr("(n_urls * crawl_delay_s + 3599) div 3600").alias(
-                "fetch_hours"
-            ),
-        )
-        .orderBy("host")
-    )
-
-
-@_q(
     "index_proximity_match",
     """
     WITH tl AS (
@@ -6374,74 +4714,6 @@ def q_index_proximity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return proximity_match(
         positional_postings(d), "table", "scan", max_dist=3
     ).orderBy("doc_id")
-
-
-@_q(
-    "web_url_templates",
-    r"""
-    WITH urls AS (
-      SELECT 'https://h' || (doc_id % 17) || '.example.org' ||
-        CASE WHEN doc_id % 3 = 0
-               THEN '/cache/' || substr(md5('tpl' || doc_id), 1, 12) || '/x'
-             WHEN doc_id % 5 = 0 THEN '/admin/login/' || doc_id
-             ELSE '/article/' || doc_id END AS url
-      FROM documents
-    ),
-    t AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1)
-               AS host,
-             -- DuckDB regexp_replace is first-match-only without the
-             -- 'g' flag (Spark's is always global)
-             regexp_replace(regexp_replace(
-               COALESCE(NULLIF(regexp_extract(url,
-                 '^[a-z][a-z0-9+.-]*://[^/]+(/[^#?]*)', 1), ''), '/'),
-               '[0-9a-f]{8,}', '{H}', 'g'), '[0-9]+', '{N}', 'g')
-               AS template,
-             url
-      FROM urls
-    )
-    SELECT host, template, COUNT(*) AS n_urls, MIN(url) AS example_url
-    FROM t GROUP BY 1, 2 HAVING COUNT(*) >= 2 ORDER BY host, template
-    """,
-)
-def q_web_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL template census (crawler-trap / mirror / frontier-budget
-    signal): hex runs ≥8 → {H}, digit runs → {N}, then one map-side-
-    combined count per (host, template) with the MIN url as the
-    deterministic example row. Three URL families (article ids, admin
-    paths, hash-addressed cache paths) exercise both rewrite classes
-    (operators/web.py::url_path_templates)."""
-    from intelligent_ocr_spark.operators.web import url_path_templates
-
-    url = F.concat(
-        F.lit("https://h"), (F.col("doc_id") % 17).cast("string"),
-        F.lit(".example.org"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.lit("/cache/"),
-                F.substring(
-                    F.md5(
-                        F.encode(
-                            F.concat(F.lit("tpl"), F.col("doc_id").cast("string")),
-                            "UTF-8",
-                        )
-                    ),
-                    1, 12,
-                ),
-                F.lit("/x"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.lit("/admin/login/"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(
-            F.concat(F.lit("/article/"), F.col("doc_id").cast("string"))
-        ),
-    )
-    d = _t(spark, sf_dir, "documents").select(url.alias("url"))
-    return url_path_templates(d, min_urls=2).orderBy("host", "template")
 
 
 @_q(
@@ -6498,76 +4770,6 @@ def q_index_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return collocations(d, max_dist=2, min_pair=5).orderBy(
         "term_a", "term_b"
     )
-
-
-@_q(
-    "web_redirect_chains",
-    """
-    WITH RECURSIVE e AS (
-      SELECT 'u' || doc_id AS src,
-             CASE WHEN doc_id % 8 BETWEEN 1 AND 5 THEN 'u' || (doc_id - 1)
-                  WHEN doc_id % 8 = 6 AND (doc_id // 8) % 3 = 0
-                    THEN 'u' || (doc_id + 1)
-                  WHEN doc_id % 8 = 7 AND (doc_id // 8) % 3 = 0
-                    THEN 'u' || (doc_id - 1)
-                  WHEN doc_id % 8 = 0 AND (doc_id // 8) % 3 = 0
-                    THEN 'u' || (doc_id + 6)
-             END AS dst
-      FROM documents
-    ),
-    m AS (
-      SELECT src, MIN(dst) AS dst FROM e
-      WHERE dst IS NOT NULL AND src <> dst GROUP BY 1
-    ),
-    walk(src, cur, hops) AS (
-      SELECT src, dst, CAST(1 AS BIGINT) FROM m
-      UNION ALL
-      SELECT w.src, m.dst, w.hops + 1 FROM walk w JOIN m ON m.src = w.cur
-      WHERE w.hops < 8
-    ),
-    term AS (
-      SELECT w.src, w.cur, w.hops FROM walk w
-      WHERE NOT EXISTS (SELECT 1 FROM m mm WHERE mm.src = w.cur)
-    )
-    SELECT m.src AS url, t.cur AS final_url, t.hops AS n_hops,
-           t.cur IS NOT NULL AS resolved
-    FROM m LEFT JOIN term t ON t.src = m.src
-    ORDER BY url
-    """,
-)
-def q_web_redirect_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Redirect-chain resolution by POINTER DOUBLING: the one-hop
-    redirect map composes with itself each round (one url-keyed
-    equi-join), so 3 rounds resolve 8-hop chains where a sequential
-    walk needs 8 joins — the DuckDB twin IS that sequential walk (a
-    recursive CTE), pinning doubling≡walk including exact hop counts.
-    The synthetic map has chains of length 1-5 ending at a terminal,
-    plus (every third group) a 2-loop and a chain FEEDING the loop —
-    those resolve to NULL/false exactly like a real client's
-    redirect-loop error (operators/web.py::resolve_redirect_chains)."""
-    from intelligent_ocr_spark.operators.web import resolve_redirect_chains
-
-    d = _t(spark, sf_dir, "documents")
-    dst = (
-        F.when(F.expr("doc_id % 8 BETWEEN 1 AND 5"), F.col("doc_id") - 1)
-        .when(
-            F.expr("doc_id % 8 = 6 AND (doc_id div 8) % 3 = 0"),
-            F.col("doc_id") + 1,
-        )
-        .when(
-            F.expr("doc_id % 8 = 7 AND (doc_id div 8) % 3 = 0"),
-            F.col("doc_id") - 1,
-        )
-        .when(
-            F.expr("doc_id % 8 = 0 AND (doc_id div 8) % 3 = 0"),
-            F.col("doc_id") + 6,
-        )
-    )
-    e = d.select(
-        F.concat(F.lit("u"), F.col("doc_id").cast("string")).alias("src"),
-        F.concat(F.lit("u"), dst.cast("string")).alias("dst"),
-    ).filter(F.col("dst").isNotNull())
-    return resolve_redirect_chains(e, rounds=3).orderBy("url")
 
 
 @_q(
@@ -6637,52 +4839,6 @@ def q_index_phrase_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phrase_bm25_topk(
         _t(spark, sf_dir, "documents"), ["table", "scan"], k=10
     )
-
-
-@_q(
-    "graph_reciprocity",
-    f"""
-    WITH p AS ({_LINK_PAGES_SQL}),
-    x AS (
-      SELECT url,
-             unnest(regexp_extract_all(html,
-                    '<a\\s[^>]*href="([^"]*)"', 1)) AS href
-      FROM p
-    ),
-    l AS (
-      SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS src,
-             regexp_extract(href, '^https?://([^/:?#]+)', 1) AS dst
-      FROM x WHERE regexp_matches(href, '^https?://')
-    ),
-    e AS (SELECT DISTINCT src, dst FROM l WHERE src <> dst),
-    rec AS (
-      SELECT e.src, e.dst FROM e
-      WHERE EXISTS (SELECT 1 FROM e r
-                    WHERE r.src = e.dst AND r.dst = e.src)
-    ),
-    n_out AS (SELECT src AS node, COUNT(*) AS n_out FROM e GROUP BY 1),
-    n_rec AS (SELECT src AS node, COUNT(*) AS n_rec FROM rec GROUP BY 1)
-    SELECT o.node, o.n_out,
-           COALESCE(r.n_rec, 0) AS n_reciprocal,
-           COALESCE(r.n_rec, 0) * 1000000 // o.n_out AS reciprocity_micro
-    FROM n_out o LEFT JOIN n_rec r USING (node)
-    ORDER BY node
-    """,
-)
-def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-exchange signal over the synthesized 40-host graph:
-    fraction of each host's distinct out-links that are reciprocated
-    (floor-micro-units) — the classic mutual-link spam feature next to
-    TrustRank/spam-mass. The reverse-edge test is a LEFT SEMI
-    self-join keyed on the FULL (src, dst) pair (hub edge sets spread
-    across the hash space), counts are map-side-combined, ratio is
-    integer-exact (operators/graph.py::reciprocity over
-    operators/web.py::extract_links + host_edges)."""
-    from intelligent_ocr_spark.operators.graph import reciprocity
-    from intelligent_ocr_spark.operators.web import extract_links, host_edges
-
-    edges = host_edges(extract_links(_link_pages(spark, sf_dir)))
-    return reciprocity(edges).orderBy("node")
 
 
 @_q(
@@ -7081,107 +5237,6 @@ def q_text_mojibake_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "web_canonical_dedup",
-    """
-    WITH p AS (
-      SELECT doc_id,
-             'http://h' || (doc_id % 40) || '.example/d/' || doc_id AS url,
-             CASE doc_id % 4
-               WHEN 0 THEN '<html><link rel="canonical" href="http://h'
-                           || (doc_id % 5) || '.example/c/' || (doc_id % 10)
-                           || '"><p>t</p></html>'
-               WHEN 1 THEN '<html><link href="/c/' || (doc_id % 10)
-                           || '" rel="canonical"><p>t</p></html>'
-               WHEN 2 THEN '<html><link rel="canonical" href="http://h'
-                           || (doc_id % 40) || '.example/d/' || doc_id
-                           || '"></html>'
-               ELSE '<html><p>t</p></html>'
-             END AS html
-      FROM documents WHERE doc_id < 240
-    ),
-    x AS (
-      SELECT url,
-             COALESCE(
-               NULLIF(regexp_extract(html,
-                 '<link\\s[^>]*rel="canonical"[^>]*href="([^"]*)"', 1), ''),
-               NULLIF(regexp_extract(html,
-                 '<link\\s[^>]*href="([^"]*)"[^>]*rel="canonical"', 1), '')
-             ) AS raw
-      FROM p
-    ),
-    r AS (
-      SELECT url,
-             CASE WHEN raw IS NULL THEN NULL
-                  WHEN regexp_matches(raw, '^https?://') THEN raw
-                  WHEN regexp_matches(raw, '^/([^/]|$)')
-                    THEN regexp_extract(url,
-                           '^([a-z][a-z0-9+.-]*://[^/?#]+)', 1) || raw
-                  ELSE NULL END AS canonical
-      FROM x
-    ),
-    g AS (
-      SELECT canonical,
-             count(*) AS n_claimers,
-             sum(CASE WHEN canonical <> url THEN 1 ELSE 0 END) AS n_aliases,
-             min(CASE WHEN canonical <> url THEN url END) AS sample_alias
-      FROM r WHERE canonical IS NOT NULL GROUP BY canonical
-    )
-    SELECT canonical, n_claimers, n_aliases, sample_alias
-    FROM g WHERE n_claimers >= 2 ORDER BY canonical
-    """,
-)
-def q_web_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rel=canonical alias-family dedup — the cheapest exact-dup signal
-    a crawl carries: mirror/tracking-variant pages DECLARE their primary
-    themselves, so one groupBy on the resolved canonical collapses alias
-    families with zero content comparison. The fixture exercises both
-    attribute orders, root-relative resolution against the page host,
-    self-canonical pages, and the no-declaration class; extraction is a
-    zero-exchange projection (plan-pinned) and grouping is one
-    map-side-combined exchange on the canonical key (operators/web.py::
-    extract_canonical / canonical_alias_groups). The oracle replays the
-    regexes and the resolution CASE branches the fixture's href forms
-    reach; the FULL resolution chain is pinned engine-vs-engine by
-    web_links_base_resolved."""
-    from intelligent_ocr_spark.operators.web import canonical_alias_groups
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
-    s = lambda c: c.cast("string")  # noqa: E731
-    url = F.concat(
-        F.lit("http://h"), s(F.col("doc_id") % 40),
-        F.lit(".example/d/"), s(F.col("doc_id")),
-    )
-    html = (
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(
-                F.lit('<html><link rel="canonical" href="http://h'),
-                s(F.col("doc_id") % 5), F.lit(".example/c/"),
-                s(F.col("doc_id") % 10), F.lit('"><p>t</p></html>'),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(
-                F.lit('<html><link href="/c/'), s(F.col("doc_id") % 10),
-                F.lit('" rel="canonical"><p>t</p></html>'),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(
-                F.lit('<html><link rel="canonical" href="http://h'),
-                s(F.col("doc_id") % 40), F.lit(".example/d/"),
-                s(F.col("doc_id")), F.lit('"></html>'),
-            ),
-        )
-        .otherwise(F.lit("<html><p>t</p></html>"))
-    )
-    pages = d.select(url.alias("url"), html.alias("html"))
-    return canonical_alias_groups(pages).orderBy("canonical")
-
-
-@_q(
     "source_cdx_dups",
     """
     WITH base AS (
@@ -7311,7 +5366,6 @@ _CHANGED_THIS_ROUND = [
     "web_domain_caps",
     "s4_input_filter",
     "pipeline_training_prep",
-    "web_robots_filter",
     "prep_bpe_tokenize",
     "text_lang_id",
     "quality_gopher_rules",

@@ -58,8 +58,7 @@ HEADLINE_QUERIES = [
     "web_domain_caps",
     "prep_pack_partitioned",
     "text_unigram_logprob",
-    # round-5 web/graph/index tier (sf-scaling variants)
-    "graph_pagerank_scaled",
+    # round-5 index tier (sf-scaling variants)
     "index_inverted_full",
     "sketch_hll_registers",
 ]

@@ -15,9 +15,8 @@ formats are this engine's crawl-facing extension, `sources/warc.py`).
 The WAT payload is JSON: per the input-hint's no-per-row-Python rule the
 reader emits the RAW payload string and link extraction happens
 JVM-side (``from_json`` with an explicit schema + one ``explode``) — so
-a 100-TB link-graph build parses JSON inside whole-stage codegen, and
-the WAT→links path composes directly with ``web.host_edges`` /
-``graph.pagerank`` without ever touching page bodies.
+a 100-TB link-graph build parses JSON inside whole-stage codegen without
+ever touching page bodies.
 """
 
 from __future__ import annotations
@@ -261,8 +260,7 @@ def wat_links(payloads: DataFrame) -> DataFrame:
     """(url, warc_ts, payload) → one row per out-link (src_url, href) —
     ``from_json`` with an explicit schema + one ``explode``, entirely
     JVM-side: the WAT route to a link graph never runs Python past the
-    record splitter and never reads a page body. Compose with
-    ``web.host_edges`` → ``graph.pagerank`` for body-free authority."""
+    record splitter and never reads a page body."""
     links = (
         F.from_json(F.col("payload"), _WAT_LINKS_SCHEMA)
         .getField("Envelope")

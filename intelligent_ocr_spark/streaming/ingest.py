@@ -29,7 +29,6 @@ __all__ = [
     "stream_warc_pages",
     "stream_extract",
     "windowed_lineage",
-    "windowed_host_links",
     "run_stream_to_parquet",
 ]
 
@@ -113,30 +112,4 @@ def run_stream_to_parquet(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .start()
-    )
-
-
-def windowed_host_links(pages_stream: DataFrame) -> DataFrame:
-    """Streaming link-graph feed: anchors extracted from arriving pages
-    (same zero-exchange ``extract_links`` code path as batch — the html
-    BINARY column decodes via a permissive cast so malformed legacy
-    bytes yield replacement chars instead of failing the micro-batch), aggregated to watermarked
-    5-minute windows of per-target-host in-link counts. This is the
-    crawl frontier's freshness signal: which hosts the newest crawl
-    slice points at, exactly-once per segment via the stream
-    checkpoint."""
-    from intelligent_ocr_spark.operators.web import extract_links
-
-    pages = pages_stream.select(
-        "url", "warc_ts", F.col("html").cast("string").alias("html")
-    )
-    links = extract_links(pages, keep=["warc_ts"])
-    return (
-        links.withWatermark("warc_ts", "10 minutes")
-        .groupBy(
-            F.window("warc_ts", "5 minutes").alias("win"),
-            F.col("dst_host"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_links"))
-        .select(F.col("win.start").alias("win_start"), "dst_host", "n_links")
     )

@@ -9,7 +9,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_all_oracles_match(spark):
-    ok, failures = run_parity(spark, SF)
+    ok, failures, _ = run_parity(spark, SF)
     assert not failures, "\n".join(failures)
     assert ok == len(entrymod.oracle_sql())
 

@@ -15,7 +15,7 @@ import pytest
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 # single-pass queries spanning the hot families (dedup, freq-hybrid,
-# packing, web, index, text) — cheap to build, no driver loops
+# packing, index, text) — cheap to build, no driver loops
 SUBSET = [
     "dedup_exact",
     "dedup_minhash_lsh",
@@ -26,7 +26,6 @@ SUBSET = [
     "text_mojibake_detect",
     "prep_pack_partitioned",
     "prep_pack_sequences",
-    "web_canonical_dedup",
     "a6_props_json",
     "index_inverted",
 ]

@@ -1,10 +1,9 @@
 """WET/WAT sidecar sources: exactly-once across split sizes, gz and
-plain containers, and the WAT-links ≡ extract_links differential."""
+plain containers, and a known-answer check of the WAT link reader."""
 
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from intelligent_ocr_spark.sources.sidecar import (
     read_wat_payloads,
@@ -60,32 +59,14 @@ def test_wet_exactly_once_across_splits(spark, tmp_path, ext):
     assert os.path.getsize(p) > 3 * 64  # the 64-byte sweep really splits
 
 
-def test_wat_links_match_extract_links(spark, tmp_path):
-    """The WAT sidecar route to a link graph must agree edge-for-edge
-    with extract_links over the HTML the links came from — body-free
-    and body-reading pipelines land on the same graph."""
-    from intelligent_ocr_spark.operators.web import extract_links
-
+def test_wat_links_known_answer(spark, tmp_path):
+    """Every link written into a WAT envelope comes back as one
+    (src_url, href) edge, across 512-byte splits of a gzip container."""
     rows = _wat_rows()
     p = str(tmp_path / "f.wat.gz")
     write_synthetic_wat(p, rows)
 
-    pages = spark.createDataFrame(
-        [
-            (
-                r["url"],
-                "<html>"
-                + "".join(f'<a href="{h}">x</a>' for h in r["links"])
-                + "</html>",
-            )
-            for r in rows
-        ],
-        "url string, html string",
-    )
-    want = sorted(
-        (r["src_url"], r["href"])
-        for r in extract_links(pages).select("src_url", "href").collect()
-    )
+    want = sorted((r["url"], h) for r in rows for h in r["links"])
     got = sorted(
         (r["src_url"], r["href"])
         for r in wat_links(read_wat_payloads(spark, p, split_size=512)).collect()

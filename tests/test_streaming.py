@@ -140,78 +140,3 @@ def test_stream_warc_gz_ingestion(spark, tmp_path):
     assert set(urls) == expected
     assert len(urls) == len(set(urls))  # each segment ingested exactly once
     assert 0 < n1 < len(expected)  # second segment arrived in a later batch
-
-
-def test_windowed_host_links_stream_equals_batch(spark, tmp_path):
-    """Streaming link feed: anchors from arriving pages aggregate to
-    watermarked per-window per-host counts that exactly match the batch
-    computation over the same files (extract_links is the same code
-    path; warc_ts rides through via keep=[...], no stream-stream
-    join)."""
-    from datetime import datetime, timedelta
-
-    from intelligent_ocr_spark.operators.web import extract_links
-    from intelligent_ocr_spark.sources.pages import PAGES_SCHEMA
-    from intelligent_ocr_spark.streaming.ingest import (
-        stream_pages,
-        windowed_host_links,
-    )
-
-    inp = str(tmp_path / "pages")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = datetime(2024, 1, 1)
-    rows = [
-        (
-            f"http://h{i % 5}.example/d/{i}",
-            t0 + timedelta(minutes=i),  # spans several 5-min windows
-            (
-                f'<a href="http://h{(i * 3 + 1) % 5}.example/x">a</a>'
-                f'<a href="http://h{(i * 7 + 2) % 5}.example/y">b</a>'
-                '<a href="/rel">r</a>'
-            ).encode(),
-            "t",
-            "en",
-        )
-        for i in range(60)
-    ]
-    spark.createDataFrame(rows, PAGES_SCHEMA).repartition(6).write.parquet(inp)
-
-    q = (
-        windowed_host_links(stream_pages(spark, inp))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    streamed = sorted(map(tuple, spark.read.parquet(out).collect()))
-
-    pages = spark.read.parquet(inp).select(
-        "url", "warc_ts", F.col("html").cast("string").alias("html")
-    )
-    batch = sorted(
-        map(
-            tuple,
-            extract_links(pages, keep=["warc_ts"])
-            .groupBy(F.window("warc_ts", "5 minutes").alias("win"), "dst_host")
-            .agg(F.count(F.lit(1)).alias("n_links"))
-            .select(F.col("win.start").alias("win_start"), "dst_host", "n_links")
-            .collect(),
-        )
-    )
-    # append mode emits a window only once the watermark (max event time
-    # minus 10 min) passes its end — the final windows stay open, which
-    # is exactly the late-data contract. Closed-window set must match
-    # batch bit-for-bit.
-    max_ts = t0 + timedelta(minutes=59)
-    closed = [
-        r for r in batch
-        if r[0] + timedelta(minutes=5 + 10) <= max_ts
-    ]
-    assert streamed == closed and len(streamed) > 0
-    assert len(batch) > len(closed)  # the open tail really was held back

@@ -20,7 +20,7 @@ DEFAULT_QUERIES = [
     "sim_cosine_topk", "sim_ann_lsh", "mm_decode_stats", "url_canonicalize",
     "text_repetition_signals", "dedup_substring_spans",
     "text_benchmark_contamination", "dedup_paragraphs", "web_domain_caps",
-    "prep_pack_partitioned", "text_unigram_logprob", "graph_pagerank_scaled",
+    "prep_pack_partitioned", "text_unigram_logprob",
     "index_inverted_full", "sketch_hll_registers",
     # round-6 optimization targets beyond the headline set
     "dedup_lsh_verified", "extract_docs_pages",

@@ -1,6 +1,7 @@
 """Dev harness mimicking the driver's oracle check: run every queries()
 entry against its oracle_sql() on one sf dir, compare row count, sorted
-column names, and order-insensitive values. Usage:
+column names, and order-insensitive values, then print the 15 queries
+whose Spark side took longest. Usage:
 
     python tools_parity.py [sf_dir] [query ...]
 """
@@ -8,6 +9,7 @@ column names, and order-insensitive values. Usage:
 from __future__ import annotations
 
 import sys
+import time
 
 import duckdb
 
@@ -41,8 +43,12 @@ def fingerprint(cols, rows):
     return [cols[i] for i in order], mat
 
 
-def run_parity(spark, sf_dir: str, only: set[str] | None = None) -> tuple[int, list[str]]:
-    """Run all oracled queries; return (n_ok, failure_messages)."""
+def run_parity(
+    spark, sf_dir: str, only: set[str] | None = None
+) -> tuple[int, list[str], dict[str, float]]:
+    """Run every query, and check the oracled ones; return (n_ok,
+    failure_messages, spark_seconds). spark_seconds maps each query run
+    to the wall seconds of building and collecting its DataFrame."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -50,18 +56,23 @@ def run_parity(spark, sf_dir: str, only: set[str] | None = None) -> tuple[int, l
     oracles = entrymod.oracle_sql()
     ok = 0
     failures: list[str] = []
+    spark_s: dict[str, float] = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        if name not in oracles:
-            try:
-                fn(spark, sf_dir).collect()
-            except Exception as e:
-                failures.append(f"{name}: rows-only spark error {str(e)[:200]}")
-            continue
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
             srows, scols = sdf.collect(), sdf.columns
+        except Exception as e:
+            kind = "error" if name in oracles else "rows-only spark error"
+            failures.append(f"{name}: {kind} {str(e)[:200]}")
+            continue
+        finally:
+            spark_s[name] = time.perf_counter() - t0
+        if name not in oracles:
+            continue
+        try:
             res = con.execute(oracles[name])
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
@@ -79,16 +90,19 @@ def run_parity(spark, sf_dir: str, only: set[str] | None = None) -> tuple[int, l
             failures.append(f"{name}: value mismatch {diffs}")
         else:
             ok += 1
-    return ok, failures
+    return ok, failures, spark_s
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:]) or None
     spark = build_session(parallelism=8, app_name="parity")
-    ok, failures = run_parity(spark, sf_dir, only)
+    ok, failures, spark_s = run_parity(spark, sf_dir, only)
     for f in failures:
         print("FAIL", f)
+    print("\nslowest Spark sides (s):")
+    for name, s in sorted(spark_s.items(), key=lambda kv: -kv[1])[:15]:
+        print(f"{s:8.2f}  {name}")
     n_oracled = len(entrymod.oracle_sql())
     print(f"\n{ok} ok, {len(failures)} failed, {len(entrymod.queries()) - n_oracled} rows-only")
     spark.stop()
