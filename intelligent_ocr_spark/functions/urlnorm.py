@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["canonical_url", "resolve_href", "TRACKING_PARAM_RE"]
+__all__ = ["canonical_url", "TRACKING_PARAM_RE"]
 
 # anchored prefix match on "name=value" tokens
 TRACKING_PARAM_RE = r"^(utm_[a-z0-9_]*|gclid|fbclid|msclkid|yclid)="
@@ -81,62 +81,3 @@ def canonical_url(url: Column) -> Column:
     )
     return F.when(url.rlike(r"^[A-Za-z][A-Za-z0-9+.-]*://"), canon).otherwise(url)
 
-
-def resolve_href(base: Column, href: Column) -> Column:
-    """Resolve an href against an absolute http(s) base URL — the
-    RFC 3986 §5 reference-resolution subset a crawl frontier needs
-    (every intra-site link in real pages is relative; dropping them
-    loses most of the frontier). Pure built-in column expressions
-    (JVM codegen, RE2-safe regexes), so resolution runs at scan speed
-    inside the extraction projection.
-
-    Resolution cases (first match wins):
-
-    * ``https?://…``  → returned unchanged (already absolute)
-    * any other ``scheme:`` ref (``mailto:``, ``javascript:``,
-      ``data:``…) → NULL (not fetchable page links)
-    * ``//host/…`` protocol-relative → base scheme + ``:`` + href
-    * ``/path…`` root-relative → base scheme+authority + href
-    * empty or ``#frag`` → NULL (same-document reference)
-    * ``?query…`` → scheme+authority+base-path + href
-    * path-relative (``a/b``, ``./a``, ``../a``) → merged with the
-      base DIRECTORY (path up to its last ``/``): leading runs of
-      ``./`` and ``../`` are consumed, each ``../`` popping one
-      directory segment, never above the root (RFC 3986 §5.3.4's
-      remove_dot_segments restricted to LEADING dot segments — the
-      form real pages emit; interior ``/./`` / ``/../`` pass through
-      unresolved, documented scope).
-
-    The DuckDB oracle twin replays the identical CASE chain
-    (`__spark_entry__.py::web_links_base_resolved`)."""
-    scheme = F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1)
-    authority = F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1)
-    base_path = F.regexp_extract(
-        base, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)", 1
-    )
-    base_dir = F.regexp_replace(base_path, r"[^/]*$", "")
-    base_dir = F.when(base_dir == "", F.lit("/")).otherwise(base_dir)
-    # leading ./ and ../ run: count the ups, keep the remainder
-    prefix = F.regexp_extract(href, r"^((\.\.?/)+)", 1)
-    n_up = (
-        (F.length(prefix) - F.length(F.regexp_replace(prefix, r"\.\./", "")))
-        / F.lit(3)
-    ).cast("int")
-    rest = F.substr(href, F.length(prefix) + F.lit(1))
-    segs = F.filter(F.split(base_dir, "/"), lambda x: x != F.lit(""))
-    kept = F.slice(segs, F.lit(1), F.greatest(F.size(segs) - n_up, F.lit(0)))
-    new_dir = F.concat(
-        F.lit("/"),
-        F.array_join(kept, "/"),
-        F.when(F.size(kept) > 0, F.lit("/")).otherwise(F.lit("")),
-    )
-    path_or_slash = F.when(base_path == "", F.lit("/")).otherwise(base_path)
-    return (
-        F.when(href.rlike(r"^https?://"), href)
-        .when(href.rlike(r"^[A-Za-z][A-Za-z0-9+.-]*:"), F.lit(None))
-        .when(href.startswith("//"), F.concat(scheme, F.lit(":"), href))
-        .when(href.startswith("/"), F.concat(authority, href))
-        .when((href == "") | href.startswith("#"), F.lit(None))
-        .when(href.startswith("?"), F.concat(authority, path_or_slash, href))
-        .otherwise(F.concat(authority, new_dir, rest))
-    )

@@ -27,6 +27,31 @@ task retry overwrites its own file idempotently instead of double-appending
 (exactly-once per partition). On a real cluster, swap
 :func:`commit_parquet_atomic` for an Iceberg ``writeTo(...).append()`` —
 the snapshot commit gives the same idempotence via validation.
+
+Commit metadata in the checkpoint footers (the parquet-dir twin of an
+Iceberg snapshot summary): the job writes three schema key-value entries
+into the footer of every checkpoint file it commits, in the same file and
+so under the same atomic rename:
+
+* ``ios.generation`` — ``"<input_snapshot_id>:<config_hash>"``;
+* ``ios.distinct_urls`` — the file's distinct non-null url count;
+* ``ios.null_url`` — ``"1"`` if the file committed a null url, else ``"0"``.
+
+:func:`generation_census` lists the checkpoint directory and sums these
+for one generation, reading only footers (a file written without the keys
+is counted from its own columns instead). The sums are exact because of
+one invariant: **within a generation, a non-null url is committed in one
+checkpoint file only.** The url-hash repartition keeps every copy of a url
+in one partition within a wave, and the resume anti-join excludes urls
+already committed from every later wave. Null urls never match the
+anti-join, so they are redone every wave and may sit in several files;
+that is why they carry a flag, not a count. Only two jobs writing one
+output directory at once can break the invariant.
+
+The commit digest of a file is part of its name
+(``part-<pid>-<16 hex>.parquet``), the same in ``data/``, ``lineage/`` and
+``checkpoint/``; the committed digest set is read from the checkpoint
+file names, never from their rows.
 """
 
 from __future__ import annotations
@@ -34,9 +59,12 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import uuid
+from typing import NamedTuple
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,15 +72,26 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "config_hash",
+    "generation_id",
     "committed_digests",
     "read_committed",
     "commit_parquet_atomic",
     "content_digest",
+    "checkpoint_footer",
+    "generation_census",
+    "lineage_docs",
     "read_table_dir",
     "completed_urls",
     "CHECKPOINT_PA_SCHEMA",
     "LINEAGE_PA_SCHEMA",
 ]
+
+FOOTER_GENERATION = b"ios.generation"
+FOOTER_DISTINCT_URLS = b"ios.distinct_urls"
+FOOTER_NULL_URL = b"ios.null_url"
+
+# part-<pid>-<digest>.parquet: the name is a file's only link to its commit
+_DIGEST_NAME = re.compile(r"-([0-9a-f]{16})\.parquet$")
 
 CHECKPOINT_PA_SCHEMA = pa.schema(
     [
@@ -101,20 +140,39 @@ def config_hash(config: dict) -> str:
     return hashlib.md5(blob).hexdigest()[:16]
 
 
-def content_digest(urls: list[str], generation: str = "") -> str:
+def generation_id(input_snapshot_id: int, cfg_hash: str) -> str:
+    """The generation ``(input_snapshot_id, config_hash)`` as one string."""
+    return f"{input_snapshot_id}:{cfg_hash}"
+
+
+def content_digest(urls: list[str | None], generation: str = "") -> str:
     """Deterministic digest of a partition's url set, salted with the
     generation identity ``(snapshot, config)`` → idempotent file name
     across task retries, unique across resume waves AND across
     generations: without the salt, rerunning the same input under a
     different config produces identical url sets per partition and would
-    silently os.replace the previous generation's committed files."""
+    silently os.replace the previous generation's committed files.
+    A null url sorts first and hashes as ``0xff``, a byte no UTF-8 url
+    contains."""
     h = hashlib.md5()
     h.update(generation.encode())
     h.update(b"\x00")
-    for u in sorted(urls):
-        h.update(u.encode())
+    for u in sorted(urls, key=lambda u: (u is not None, u or "")):
+        h.update(b"\xff" if u is None else u.encode())
         h.update(b"\n")
     return h.hexdigest()[:16]
+
+
+def checkpoint_footer(urls: list[str | None], generation: str) -> dict[bytes, bytes]:
+    """The footer entries of a checkpoint file committing ``urls`` under
+    ``generation`` (see the module docstring)."""
+    distinct = set(urls)
+    has_null = None in distinct
+    return {
+        FOOTER_GENERATION: generation.encode(),
+        FOOTER_DISTINCT_URLS: str(len(distinct) - has_null).encode(),
+        FOOTER_NULL_URL: b"1" if has_null else b"0",
+    }
 
 
 def commit_parquet_atomic(table: pa.Table, directory: str, name: str) -> str:
@@ -132,14 +190,36 @@ def commit_parquet_atomic(table: pa.Table, directory: str, name: str) -> str:
     return final
 
 
-def committed_digests(spark: SparkSession, checkpoint_dir: str) -> DataFrame | None:
+def _digest_files(directory: str) -> list[tuple[str, str]]:
+    """(commit digest, path) of each committed-name parquet file in
+    ``directory``, in name order; temp files are skipped. A misnamed file
+    raises: it would otherwise silently drop out of the committed view."""
+    if not os.path.isdir(directory):
+        return []
+    found, bad = [], []
+    for f in sorted(os.listdir(directory)):
+        if f.startswith(".") or not f.endswith(".parquet"):
+            continue
+        m = _DIGEST_NAME.search(f)
+        if m is None:
+            bad.append(f)
+        else:
+            found.append((m.group(1), os.path.join(directory, f)))
+    if bad:
+        raise ValueError(
+            f"{len(bad)} file(s) in {directory} carry no commit digest in their "
+            f"name (contract: part-<pid>-<16 hex>.parquet) and would silently "
+            f"drop from the committed view: {bad[:5]}"
+        )
+    return found
+
+
+def committed_digests(checkpoint_dir: str) -> set[str]:
     """Digests of partitions whose CHECKPOINT rename (the single commit
-    point) completed. Data/lineage files are renamed first; a crash between
-    the renames leaves orphan files whose digest never appears here."""
-    ckpt = read_table_dir(spark, checkpoint_dir)
-    if ckpt is None:
-        return None
-    return ckpt.select("commit_digest").distinct()
+    point) completed, from the checkpoint file names. Data/lineage files
+    are renamed first; a crash between the renames leaves orphan files
+    whose digest no checkpoint file carries."""
+    return {digest for digest, _ in _digest_files(checkpoint_dir)}
 
 
 def read_committed(spark: SparkSession, out_dir: str, sub: str) -> DataFrame | None:
@@ -147,44 +227,24 @@ def read_committed(spark: SparkSession, out_dir: str, sub: str) -> DataFrame | N
     exactly-once read view. Orphans from a crash between renames (data
     present, checkpoint absent) are excluded, so a resumed job's re-emission
     of those urls cannot surface duplicates."""
-    import os as _os
-
-    table = read_table_dir(spark, _os.path.join(out_dir, sub))
+    directory = os.path.join(out_dir, sub)
+    table = read_table_dir(spark, directory)
     if table is None:
         return None
     if "commit_digest" not in table.columns:
         # Data files carry the digest in their NAME (part-{pid}-{digest}),
         # not as a column — the streamed writer can't know the digest until
-        # the partition's last batch. Same derivation the janitor uses.
-        # The name is the ONLY link between a data file and the checkpoint,
-        # so a misnamed-but-present file must fail loudly rather than
-        # silently vanish from the committed view (regexp_extract returns
-        # '' for non-matches, which would semi-join to nothing).
-        import re as _re
-
-        data_dir = _os.path.join(out_dir, sub)
-        bad = [
-            f
-            for f in sorted(_os.listdir(data_dir))
-            if f.endswith(".parquet")
-            and not f.startswith(".")
-            and not _re.search(r"-[0-9a-f]{16}\.parquet$", f)
-        ]
-        if bad:
-            raise ValueError(
-                f"read_committed: {len(bad)} data file(s) in {data_dir} carry no "
-                f"commit digest in their name (contract: part-<pid>-<16 hex>."
-                f"parquet) and would silently drop from the committed view: "
-                f"{bad[:5]}"
-            )
+        # the partition's last batch. _digest_files fails on a misnamed
+        # file, for which regexp_extract would return '' and drop its rows.
+        _digest_files(directory)
         table = table.withColumn(
             "commit_digest",
-            F.regexp_extract(F.input_file_name(), r"-([0-9a-f]{16})\.parquet$", 1),
+            F.regexp_extract(F.input_file_name(), _DIGEST_NAME.pattern, 1),
         )
-    digests = committed_digests(spark, _os.path.join(out_dir, "checkpoint"))
-    if digests is None:
+    digests = committed_digests(os.path.join(out_dir, "checkpoint"))
+    if not digests:
         return None  # zero committed partitions — same signal as no data
-    return table.join(F.broadcast(digests), "commit_digest", "left_semi")
+    return table.filter(F.col("commit_digest").isin(sorted(digests)))
 
 
 def read_table_dir(spark: SparkSession, directory: str) -> DataFrame | None:
@@ -206,15 +266,74 @@ def completed_urls(
 
     Mismatched snapshot/config rows simply don't qualify — the Spark twin of
     checkpoint invalidation-by-deletion (``core/checkpoint.py:199-238``).
+    The read names its columns, so Spark infers no schema (inference runs a
+    Spark job over the files' footers).
     """
-    ckpt = read_table_dir(spark, checkpoint_dir)
-    if ckpt is None:
+    if not _digest_files(checkpoint_dir):
         return None
-    return (
-        ckpt.filter(
-            (F.col("input_snapshot_id") == F.lit(input_snapshot_id))
-            & (F.col("config_hash") == F.lit(cfg_hash))
-        )
-        .select("url")
-        .distinct()
+    ckpt = spark.read.schema(
+        "url string, input_snapshot_id bigint, config_hash string"
+    ).parquet(checkpoint_dir)
+    return ckpt.filter(
+        (F.col("input_snapshot_id") == F.lit(input_snapshot_id))
+        & (F.col("config_hash") == F.lit(cfg_hash))
+    ).select("url")
+
+
+class GenerationCensus(NamedTuple):
+    """What one generation has committed, summed over its checkpoint files."""
+
+    rows: int  # checkpoint rows
+    urls: int  # distinct urls, a null url counted once
+    digests: frozenset[str]  # commit digests of the generation's files
+
+
+def generation_census(
+    checkpoint_dir: str, input_snapshot_id: int, cfg_hash: str
+) -> GenerationCensus:
+    """Sum the footers of the checkpoint files of one generation — no Spark
+    action, one footer read per file. A file without the footer keys is
+    counted from its own ``url``/generation columns. The distinct-url sum
+    is exact by the one-file-per-url invariant (module docstring)."""
+    generation = generation_id(input_snapshot_id, cfg_hash)
+    rows = urls = 0
+    has_null = False
+    digests = set()
+    for digest, path in _digest_files(checkpoint_dir):
+        meta = pq.read_metadata(path)
+        kv = meta.metadata or {}
+        if FOOTER_GENERATION in kv:
+            if kv[FOOTER_GENERATION] != generation.encode():
+                continue
+            file_rows = meta.num_rows
+            file_urls = int(kv[FOOTER_DISTINCT_URLS])
+            file_null = kv[FOOTER_NULL_URL] == b"1"
+        else:
+            t = pq.read_table(path, columns=["url", "input_snapshot_id", "config_hash"])
+            t = t.filter(
+                pc.and_(
+                    pc.equal(t.column("input_snapshot_id"), input_snapshot_id),
+                    pc.equal(t.column("config_hash"), cfg_hash),
+                )
+            )
+            if not t.num_rows:
+                continue
+            url = t.column("url")
+            file_rows = t.num_rows
+            file_urls = pc.count_distinct(url, mode="only_valid").as_py()
+            file_null = url.null_count > 0
+        rows += file_rows
+        urls += file_urls
+        has_null |= file_null
+        digests.add(digest)
+    return GenerationCensus(rows, urls + has_null, frozenset(digests))
+
+
+def lineage_docs(lineage_dir: str, digests: frozenset[str]) -> int:
+    """Sum of ``docs`` over the lineage files whose names carry one of
+    ``digests`` — one row per file, read with pyarrow."""
+    return sum(
+        pc.sum(pq.read_table(path, columns=["docs"]).column("docs")).as_py() or 0
+        for digest, path in _digest_files(lineage_dir)
+        if digest in digests
     )

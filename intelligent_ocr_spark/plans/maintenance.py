@@ -145,7 +145,7 @@ def remove_orphan_files(
     spark: SparkSession, out_dir: str, tmp_grace_seconds: float = 3600.0
 ) -> list[str]:
     """Janitor for torn commits: delete data/lineage files whose
-    commit_digest is referenced by NO checkpoint row (the crash window
+    commit digest no checkpoint file name carries (the crash window
     between the data/lineage renames and the checkpoint rename). Run only
     while no job is writing to ``out_dir`` — an in-flight partition between
     its renames looks identical to an orphan.
@@ -157,10 +157,7 @@ def remove_orphan_files(
     and fail that partition — a temp still being row-group-appended has a
     fresh mtime. Pass 0 to force-sweep everything (offline cleanup)."""
     now = time.time()
-    digests_df = committed_digests(spark, os.path.join(out_dir, "checkpoint"))
-    committed = (
-        {r["commit_digest"] for r in digests_df.collect()} if digests_df is not None else set()
-    )
+    committed = committed_digests(os.path.join(out_dir, "checkpoint"))
     removed: list[str] = []
     for sub in ("data", "lineage"):
         d = os.path.join(out_dir, sub)

@@ -14,22 +14,30 @@ SURVEY.md §3.4:
       .repartition(P, xxhash64("url"))           -- url-hash layout (north_rule)
       .mapInArrow(extract_and_commit, lineage)   -- M1..M4, F2..F5, X1..X5, W1/W3 fused
       -> per-partition atomic commit of data + checkpoint + lineage rows
-      -> integrity gate (R5) over the checkpoint table
+      -> integrity gate (R5) from the checkpoint-file footers
 
 Exactly one JVM↔Python boundary (Arrow) and one shuffle (the url-hash
 repartition). Lineage is the ONLY thing that crosses back to the driver:
 one row per partition.
 
-Resume census: when a checkpoint exists, one url-only Spark action (a full
-outer join of the input's distinct urls with this generation's committed
-urls) counts the distinct input urls, the committed urls and the input
-urls not yet committed. With none left the job builds no anti-join,
-repartition or ``mapInArrow`` and writes nothing; the ``"input"`` gate is
-answered from the same counts, which are exactly what a post-job re-read
-would see. Otherwise the job runs, and the gate re-reads the checkpoint
-but takes the input count from the census instead of rescanning the
-input. A cold run (no checkpoint) has no census and its gate scans the
-input as before.
+Resume census: when a checkpoint exists, one url-only Spark action counts
+the distinct input urls and the input urls not yet committed: the input's
+urls are left-joined to this generation's committed urls (a join that can
+broadcast the committed side), then de-duplicated. With none left the job
+builds no anti-join, repartition or ``mapInArrow`` and writes nothing.
+
+Integrity gate: each committed checkpoint file carries its generation,
+its distinct non-null url count and a null-url flag in its parquet footer
+(``plans/checkpoint.py``). The gate lists the checkpoint directory and sums
+the footers of this generation (:func:`generation_census`, no Spark
+action), and never re-reads the checkpoint. The ``"input"`` gate compares
+that sum with the input's distinct url count: a resume takes it from its
+census, a cold run (no checkpoint, no census) runs one url-only count of
+the input. The ``"lineage"`` gate compares the generation's checkpoint rows
+(the footers' row counts) with the ``docs`` of the lineage files that carry
+the same digests. So a cold job runs two Spark actions (commit, input
+count), a resume with work left two (census, commit) and a no-op resume
+one (census).
 
 Scale notes: the commit stage STREAMS — each incoming Arrow batch goes
 through the same extraction kernel as ``extract_pages``
@@ -44,7 +52,8 @@ per doc, not the doc). The reference's own incremental temp save
 (``core/pdf_processor.py:1397-1404``, save every N pages) has the same
 never-hold-the-whole-unit intent. At 10^12 docs nothing here is
 driver-bound: resume is a distributed anti-join, commits are
-executor-local, lineage is O(partitions).
+executor-local, lineage and the footers the gate reads are
+O(partitions).
 """
 
 from __future__ import annotations
@@ -72,12 +81,15 @@ from intelligent_ocr_spark.operators.extract import (
 from intelligent_ocr_spark.plans.checkpoint import (
     CHECKPOINT_PA_SCHEMA,
     LINEAGE_PA_SCHEMA,
+    checkpoint_footer,
     commit_parquet_atomic,
     completed_urls,
     config_hash,
     content_digest,
+    generation_census,
+    generation_id,
+    lineage_docs,
     read_committed,
-    read_table_dir,
 )
 from intelligent_ocr_spark.session import drop_zip_importers
 
@@ -231,9 +243,9 @@ def _make_commit_fn(
             return
         writer.close()
 
-        digest = content_digest(
-            [u for u, _ in url_status], f"{input_snapshot_id}:{cfg_hash}"
-        )
+        generation = generation_id(input_snapshot_id, cfg_hash)
+        urls = [u for u, _ in url_status]
+        digest = content_digest(urls, generation)
         name = f"part-{pid:05d}-{digest}"
         ended = datetime.now(timezone.utc)
 
@@ -268,7 +280,8 @@ def _make_commit_fn(
         commit_parquet_atomic(lineage_table, lineage_dir, name)
         if crash_between_renames is not None:
             crash_between_renames(pid)  # test-only: simulate torn commit
-        # 3) checkpoint rows — the COMMIT POINT (J2 anti-join side)
+        # 3) checkpoint rows — the COMMIT POINT (J2 anti-join side); the
+        # file's footer carries the generation's commit metadata
         ckpt_rows = [
             {
                 "url": u,
@@ -281,10 +294,9 @@ def _make_commit_fn(
             }
             for u, st in url_status
         ]
+        ckpt_schema = CHECKPOINT_PA_SCHEMA.with_metadata(checkpoint_footer(urls, generation))
         commit_parquet_atomic(
-            pa.Table.from_pylist(ckpt_rows, schema=CHECKPOINT_PA_SCHEMA),
-            ckpt_dir,
-            name,
+            pa.Table.from_pylist(ckpt_rows, schema=ckpt_schema), ckpt_dir, name
         )
         yield from lineage_table.drop_columns("commit_digest").to_batches()
 
@@ -323,9 +335,9 @@ def run_extraction_job(
     # extract_batch reads its input columns by position
     pages = input_df.select("url", "warc_ts", "html", "text", "lang")
     done = completed_urls(spark, ckpt_dir, input_snapshot_id, cfg_hash)
-    n_input = n_committed = n_left = None
+    n_input = n_left = None
     if done is not None:
-        n_input, n_committed, n_left = _resume_census(pages, done)
+        n_input, n_left = _resume_census(pages, done)
 
     lineage_rows = []
     if n_left != 0:  # a cold run, or a resume with urls left
@@ -358,65 +370,50 @@ def run_extraction_job(
     }
 
     if integrity_check:
-        # R5 gate (reference core/pdf_processor.py:1585-1603). Two modes:
+        # R5 gate (reference core/pdf_processor.py:1585-1603), answered from
+        # the checkpoint footers of this generation — no checkpoint re-read
+        # (plans/checkpoint.py: generation_census). Two modes:
         # * "input" (default, and what `True` means): every input url is
-        #   committed exactly once — exact; a cold run re-scans the input
-        #   for its url count, a resume takes it from the census.
-        # * "lineage": reconcile the checkpoint against the lineage docs
-        #   sums for this generation — O(commit metadata), no input scan;
-        #   catches torn/missing partition commits, not absent inputs.
+        #   committed exactly once — exact; a cold run counts the input's
+        #   urls, a resume takes that count from its census.
+        # * "lineage": every extracted record writes exactly one checkpoint
+        #   ROW and counts once in lineage docs, so the generation's
+        #   checkpoint rows must equal the docs of its lineage files (rows,
+        #   NOT distinct urls — duplicate input urls legitimately commit one
+        #   row each). No input read; catches torn/missing partition
+        #   commits, not absent inputs.
+        committed = generation_census(ckpt_dir, input_snapshot_id, cfg_hash)
         if integrity_check == "lineage":
-            # Every extracted record writes exactly one checkpoint ROW and
-            # counts once in lineage docs, so compare row counts (NOT
-            # distinct urls — duplicate input urls legitimately commit one
-            # row each and must not trip the gate). Scope to THIS
-            # generation's commit digests (lineage rows carry the snapshot
-            # but not the config hash).
-            lin = read_committed(spark, out_dir, "lineage")
-            ckpt = read_table_dir(spark, ckpt_dir)
-            n_rows = 0
-            n_lineage = 0
-            if ckpt is not None:
-                gen_ckpt = ckpt.filter(
-                    (F.col("input_snapshot_id") == F.lit(input_snapshot_id))
-                    & (F.col("config_hash") == F.lit(cfg_hash))
-                )
-                n_rows = gen_ckpt.count()
-                if lin is not None:
-                    gen_digests = gen_ckpt.select("commit_digest").distinct()
-                    n_lineage = (
-                        lin.join(F.broadcast(gen_digests), "commit_digest", "left_semi")
-                        .agg(F.sum("docs"))
-                        .collect()[0][0]
-                        or 0
-                    )
-            if n_rows != n_lineage:
+            n_lineage = lineage_docs(os.path.join(out_dir, "lineage"), committed.digests)
+            if committed.rows != n_lineage:
                 raise IntegrityError(
-                    f"checkpoint rows {n_rows} != lineage docs {n_lineage}"
+                    f"checkpoint rows {committed.rows} != lineage docs {n_lineage}"
                 )
         else:
-            if n_left != 0:  # the job committed: re-read the checkpoint
-                committed = completed_urls(spark, ckpt_dir, input_snapshot_id, cfg_hash)
-                n_committed = committed.count() if committed is not None else 0
             if n_input is None:  # cold run: no census
                 n_input = input_df.select("url").distinct().count()
-            if n_committed != n_input:
+            if committed.urls != n_input:
                 raise IntegrityError(
-                    f"committed urls {n_committed} != input urls {n_input}"
+                    f"committed urls {committed.urls} != input urls {n_input}"
                 )
         summary["integrity_ok"] = True
     return summary
 
 
-def _resume_census(pages: DataFrame, done: DataFrame) -> tuple[int, int, int]:
-    """(distinct input urls, committed urls, input urls not committed) in
-    one url-only Spark action: a full outer join of the input's distinct
-    urls with ``done``. Null urls count like any other value, as in the
-    gate's ``distinct().count()``, and never match, as in the anti-join."""
-    inp = pages.select("url").distinct().withColumn("_in", F.lit(True))
-    dn = done.withColumn("_done", F.lit(True))
-    counts = inp.join(dn, "url", "full_outer").agg(
-        F.count("_in"), F.count("_done"), F.count(F.when(F.col("_done").isNull(), True))
+def _resume_census(pages: DataFrame, done: DataFrame) -> tuple[int, int]:
+    """(distinct input urls, input urls not committed) in one url-only
+    Spark action: the input's urls left-joined to ``done``, then
+    de-duplicated. Unlike a full outer join, a left join can broadcast
+    ``done``. Each url keeps one
+    row, matched or not; a null url counts once among the input urls, as in
+    the cold gate's ``distinct().count()``, and never matches, as in the
+    anti-join."""
+    matched = done.withColumn("_done", F.lit(True))
+    counts = (
+        pages.select("url")
+        .join(matched, "url", "left")
+        .distinct()
+        .agg(F.count(F.lit(1)), F.count(F.when(F.col("_done").isNull(), True)))
     )
     return tuple(counts.collect()[0])
 

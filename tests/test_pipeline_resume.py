@@ -2,13 +2,19 @@
 core/checkpoint.py state machine + core/pdf_processor.py resume flow)."""
 
 import os
+import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
 
 from intelligent_ocr_spark.operators.extract import EXTRACT_SCHEMA
-from intelligent_ocr_spark.plans.checkpoint import read_committed, read_table_dir
+from intelligent_ocr_spark.plans.checkpoint import (
+    generation_census,
+    read_committed,
+    read_table_dir,
+)
 from intelligent_ocr_spark.plans.pipeline import (
     IntegrityError,
     finalize_with_fallback,
@@ -108,28 +114,35 @@ def test_snapshot_change_invalidates_checkpoint(spark, tmp_path):
     assert s["docs_processed"] == 60
 
 
+def _torn_footer_reader(monkeypatch, tmp_path):
+    """Patch the gate's footer reader so that one committed checkpoint file
+    is missing from its view (a torn readback); returns its call count."""
+    import intelligent_ocr_spark.plans.pipeline as P
+
+    real = P.generation_census
+    calls = {"n": 0}
+
+    def torn(ckpt_dir, *args):
+        calls["n"] += 1
+        view = tmp_path / f"torn-view-{calls['n']}"
+        shutil.copytree(ckpt_dir, view)
+        os.remove(view / sorted(f for f in os.listdir(view) if f.endswith(".parquet"))[0])
+        return real(str(view), *args)
+
+    monkeypatch.setattr(P, "generation_census", torn)
+    return calls
+
+
 def test_integrity_gate_raises_on_missing_urls(spark, tmp_path, monkeypatch):
     """Simulate a torn commit (checkpoint rows lost) → the R5 gate must
     abort instead of silently under-delivering (reference hard assert
     core/pdf_processor.py:1600-1603)."""
-    import intelligent_ocr_spark.plans.pipeline as P
-
     out = str(tmp_path / "out")
     inp = pages_df(spark, 40, partitions=2)
-    real = P.completed_urls
-    calls = {"n": 0}
-
-    def torn(*args, **kwargs):
-        calls["n"] += 1
-        res = real(*args, **kwargs)
-        # first call = resume lookup (None, fresh run); later = gate readback
-        if calls["n"] >= 2 and res is not None:
-            return res.limit(10)
-        return res
-
-    monkeypatch.setattr(P, "completed_urls", torn)
+    calls = _torn_footer_reader(monkeypatch, tmp_path)
     with pytest.raises(IntegrityError):
-        P.run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=4)
+        run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=4)
+    assert calls["n"] == 1
 
 
 def test_lineage_integrity_mode(spark, tmp_path):
@@ -303,30 +316,17 @@ def test_noop_resume_skips_the_commit_stage(spark, tmp_path):
 
 
 def test_integrity_gate_raises_on_missing_urls_after_tail_resume(spark, tmp_path, monkeypatch):
-    """The gate re-reads the checkpoint after a resumed tail commits: a torn
-    readback there must still abort."""
-    import intelligent_ocr_spark.plans.pipeline as P
-
+    """The gate reads the checkpoint footers after a resumed tail commits:
+    a torn readback there must still abort."""
     out = str(tmp_path / "out")
     inp = pages_df(spark, N, partitions=4)
     base = inp.filter(F.pmod(F.xxhash64("url"), F.lit(10)) != 0)
     s = run_extraction_job(spark, base, out, SNAPSHOT, num_partitions=4)
     assert 0 < s["docs_processed"] < N
-    real = P.completed_urls
-    calls = {"n": 0}
-
-    def torn(*args, **kwargs):
-        calls["n"] += 1
-        res = real(*args, **kwargs)
-        # first call = resume lookup (the 90% done-set); later = gate readback
-        if calls["n"] >= 2 and res is not None:
-            return res.limit(10)
-        return res
-
-    monkeypatch.setattr(P, "completed_urls", torn)
+    calls = _torn_footer_reader(monkeypatch, tmp_path)
     with pytest.raises(IntegrityError):
-        P.run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=4)
-    assert calls["n"] == 2
+        run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=4)
+    assert calls["n"] == 1
 
 
 def test_noop_resume_over_a_subset_fails_the_gate(spark, tmp_path):
@@ -353,4 +353,122 @@ def test_resume_census_counts_null_urls_like_the_gate(spark, tmp_path):
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     done = spark.createDataFrame([("a",), ("z",), (None,)], "url string")
-    assert _resume_census(pages, done) == (3, 3, 2)
+    assert _resume_census(pages, done) == (3, 2)
+
+
+_NULLABLE_PAGES = "url string, warc_ts timestamp, html binary, text string, lang string"
+
+
+def _sql_executions(spark) -> int:
+    """Id of the session's latest SQL execution. Ids count up by one per
+    execution; the store's size stops growing at
+    ``spark.sql.ui.retainedExecutions``, so it cannot count."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return executions.last().executionId() if executions.size() else -1
+
+
+def test_spark_executions_per_phase(spark, tmp_path):
+    """The job's Spark SQL executions per phase: a cold job runs the commit
+    and one input url count; a tail resume runs its census and the commit;
+    a no-op resume runs only its census. The gates read footers."""
+    out = str(tmp_path / "out")
+    inp = pages_df(spark, N, partitions=4)
+    base = inp.filter(F.pmod(F.xxhash64("url"), F.lit(10)) != 0)
+    counts = []
+    for df in (base, inp, inp):
+        before = _sql_executions(spark)
+        s = run_extraction_job(spark, df, out, SNAPSHOT, num_partitions=4)
+        counts.append(_sql_executions(spark) - before)
+        assert s["integrity_ok"]
+    assert counts == [2, 2, 1]
+    assert s["docs_processed"] == 0
+
+
+def test_duplicate_and_null_urls_across_waves(spark, tmp_path):
+    """Duplicate urls commit one row each in one file and null urls are
+    redone every wave; the footer sums match the input's distinct urls (a
+    null url counted once) after a cold job and two tail waves."""
+    def pages(urls):
+        return spark.createDataFrame(
+            [(u, None, f"<p>page {u} body</p>".encode(), "", "en") for u in urls],
+            _NULLABLE_PAGES,
+        )
+
+    url = [f"https://d.example/{i}" for i in range(23)]
+    # each wave's input: every url so far, copies of some old and some new
+    # urls, and two null urls
+    waves = (
+        url[:12] + url[:3],
+        url[:20] + url[:3] + url[14:16],
+        url + url[:3] + url[14:16],
+    )
+    out = str(tmp_path / "out")
+    docs = []
+    for urls in waves:
+        s = run_extraction_job(
+            spark, pages(urls + [None, None]), out, SNAPSHOT, num_partitions=3
+        )
+        assert s["integrity_ok"]
+        docs.append(s["docs_processed"])
+    # rows per wave: new urls, copies of new urls, both null rows again
+    assert docs == [12 + 3 + 2, 8 + 2 + 2, 3 + 2]
+    census = generation_census(os.path.join(out, "checkpoint"), SNAPSHOT, s["config_hash"])
+    assert census.urls == 23 + 1
+    assert census.rows == sum(docs)
+
+
+def _strip_footers(ckpt_dir: str) -> int:
+    """Rewrite every checkpoint file without its footer keys, as a file
+    from before they existed; returns how many it rewrote."""
+    names = [f for f in os.listdir(ckpt_dir) if f.endswith(".parquet")]
+    for f in names:
+        path = os.path.join(ckpt_dir, f)
+        pq.write_table(pq.read_table(path).replace_schema_metadata(None), path)
+    return len(names)
+
+
+def test_checkpoint_without_footer_keys_resumes(spark, tmp_path):
+    """A checkpoint written without the footer keys is counted from its
+    columns: a tail resume over it is exact, and both gates pass."""
+    out = str(tmp_path / "out")
+    inp = pages_df(spark, N, partitions=4)
+    base = inp.filter(F.pmod(F.xxhash64("url"), F.lit(10)) != 0)
+    s = run_extraction_job(spark, base, out, SNAPSHOT, num_partitions=4)
+    ckpt_dir = os.path.join(out, "checkpoint")
+    keyed = generation_census(ckpt_dir, SNAPSHOT, s["config_hash"])
+    assert _strip_footers(ckpt_dir) > 0
+    f = sorted(os.listdir(ckpt_dir))[0]
+    assert b"ios.generation" not in (pq.read_metadata(os.path.join(ckpt_dir, f)).metadata or {})
+    assert generation_census(ckpt_dir, SNAPSHOT, s["config_hash"]) == keyed
+    assert generation_census(ckpt_dir, SNAPSHOT + 1, s["config_hash"]).urls == 0
+
+    t = run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=4)
+    assert t["integrity_ok"] and t["docs_processed"] == N - s["docs_processed"]
+    n = run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=4, integrity_check="lineage")
+    assert n["integrity_ok"] and n["docs_processed"] == 0
+
+
+def test_two_generations_counted_apart(spark, tmp_path):
+    """Two generations in one output directory: each gate counts only its
+    own checkpoint files."""
+    out = str(tmp_path / "out")
+    inp = pages_df(spark, 60, partitions=2)
+    half = inp.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
+    a = run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=4)
+    b = run_extraction_job(spark, half, out, SNAPSHOT, num_partitions=4, min_confidence=0.9)
+    assert a["integrity_ok"] and b["integrity_ok"]
+    assert a["config_hash"] != b["config_hash"]
+    assert 0 < b["docs_processed"] < 60
+    ckpt_dir = os.path.join(out, "checkpoint")
+    ca = generation_census(ckpt_dir, SNAPSHOT, a["config_hash"])
+    cb = generation_census(ckpt_dir, SNAPSHOT, b["config_hash"])
+    assert (ca.urls, cb.urls) == (60, b["docs_processed"])
+    assert not ca.digests & cb.digests
+    # each no-op resume passes its own gate, in both modes
+    for df, kw in ((inp, {}), (half, {"min_confidence": 0.9})):
+        for gate in (True, "lineage"):
+            s = run_extraction_job(
+                spark, df, out, SNAPSHOT, num_partitions=4, integrity_check=gate, **kw
+            )
+            assert s["integrity_ok"] and s["docs_processed"] == 0

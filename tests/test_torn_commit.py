@@ -123,3 +123,24 @@ def test_misnamed_data_file_fails_loudly(spark, tmp_path):
         read_committed(spark, out, "data").count()
     os.remove(rogue)
     assert read_committed(spark, out, "data").count() == 40
+
+
+def test_misnamed_checkpoint_file_fails_loudly(spark, tmp_path):
+    """The committed digest set comes from the checkpoint file names, so a
+    checkpoint file without the part-<pid>-<digest> name must raise, in the
+    committed view and in the job's gate, rather than drop its commit."""
+    import shutil
+
+    out = str(tmp_path / "out")
+    inp = pages_df(spark, 40, partitions=2)
+    run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=2)
+    ckpt_dir = os.path.join(out, "checkpoint")
+    src = os.path.join(ckpt_dir, sorted(os.listdir(ckpt_dir))[0])
+    rogue = os.path.join(ckpt_dir, "restored-backup.parquet")
+    shutil.copy(src, rogue)
+    with pytest.raises(ValueError, match="commit digest"):
+        read_committed(spark, out, "data")
+    with pytest.raises(ValueError, match="commit digest"):
+        run_extraction_job(spark, inp, out, SNAPSHOT, num_partitions=2)
+    os.remove(rogue)
+    assert read_committed(spark, out, "data").count() == 40

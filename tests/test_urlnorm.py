@@ -43,38 +43,3 @@ def test_canonical_url_is_codegen_only(spark):
     )
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
-
-def test_resolve_href_cases(spark):
-    """RFC 3986 §5 reference-resolution subset: absolute pass-through,
-    foreign schemes NULL, protocol/root/query-relative, path merges
-    with leading ./ and ../ runs clamped at the root."""
-    from intelligent_ocr_spark.functions.urlnorm import resolve_href
-
-    cases = [
-        ("http://h.ex/a/b/c.html", "http://x.ex/p", "http://x.ex/p"),
-        ("http://h.ex/a/b/c.html", "mailto:a@b", None),
-        ("http://h.ex/a/b/c.html", "javascript:void(0)", None),
-        ("http://h.ex/a/b/c.html", "data:text/plain,x", None),
-        ("https://h.ex/a/b/c.html", "//cdn.ex/x.js", "https://cdn.ex/x.js"),
-        ("http://h.ex:8080/a/b/c.html", "/r.html", "http://h.ex:8080/r.html"),
-        ("http://h.ex/a/b/c.html", "", None),
-        ("http://h.ex/a/b/c.html", "#sec", None),
-        ("http://h.ex/a/b/c.html", "?q=1", "http://h.ex/a/b/c.html?q=1"),
-        ("http://h.ex", "?q=1", "http://h.ex/?q=1"),
-        ("http://h.ex/a/b/c.html", "d.html", "http://h.ex/a/b/d.html"),
-        ("http://h.ex/a/b/c.html", "./d.html", "http://h.ex/a/b/d.html"),
-        ("http://h.ex/a/b/c.html", "././d.html", "http://h.ex/a/b/d.html"),
-        ("http://h.ex/a/b/c.html", "../d.html", "http://h.ex/a/d.html"),
-        ("http://h.ex/a/b/c.html", "../../d.html", "http://h.ex/d.html"),
-        ("http://h.ex/a/b/c.html", "../../../d.html", "http://h.ex/d.html"),
-        ("http://h.ex/a/b/c.html", "./../d.html", "http://h.ex/a/d.html"),
-        ("http://h.ex/a/b/", "x/y.html?z=1#f", "http://h.ex/a/b/x/y.html?z=1#f"),
-        ("http://h.ex", "d.html", "http://h.ex/d.html"),
-    ]
-    df = spark.createDataFrame(cases, "base string, href string, want string")
-    rows = df.select(
-        "base", "href", "want",
-        resolve_href(F.col("base"), F.col("href")).alias("got"),
-    ).collect()
-    for r in rows:
-        assert r.got == r.want, (r.base, r.href, r.got, r.want)
